@@ -7,6 +7,7 @@ semantics; the Drive/logging knobs are out-of-engine sink options.
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass
 
@@ -24,11 +25,15 @@ class ValuationThresholds:
     @classmethod
     def from_env(cls) -> "ValuationThresholds":
         def _f(name: str, default: float) -> float:
+            # float() also parses nan/inf; a non-finite threshold is as
+            # unusable as an unparsable one (NaN orders above every double
+            # in Spark, so PEG_MAX=nan would pass every positive PEG)
             raw = os.environ.get(name)
             try:
-                return float(raw) if raw not in (None, "") else default
+                value = float(raw) if raw not in (None, "") else default
             except ValueError:
                 return default
+            return value if math.isfinite(value) else default
 
         return cls(
             undervalued=_f("UNDERVALUED_THRESHOLD", 0.90),

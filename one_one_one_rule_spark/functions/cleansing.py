@@ -1,8 +1,10 @@
-"""Cleansing expression library — native Column builders, no UDFs.
+"""Cleansing expression library — Spark SQL expression text, no UDFs.
 
 Replaces the reference's pandas cleanse stage (transform_valuation.py:99-149)
 with Catalyst expressions: everything here fuses into one whole-stage-codegen
-projection.
+projection. Each function takes an operand as SQL text (a quoted column
+name or any expression) and returns SQL text; Column callers wrap it in
+``F.expr``.
 
 Engine convention (SURVEY.md §1 hazard): all missing/invalid numerics become
 SQL NULL at ingestion — never NaN — so three-valued logic, medians, and
@@ -11,22 +13,16 @@ coalesce reproduce the reference's pandas-NaN semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-_INF = float("inf")
-
-
-def normalize_symbol(col: Column | str) -> Column:
+def normalize_symbol(col: str) -> str:
     """F3 — ticker normalization: strip → upper → literal '.'→'-'.
 
     Reference: transform_valuation.py:105-111, extract_tickers.py:12-18.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.replace(F.upper(F.trim(c)), F.lit("."), F.lit("-"))
+    return f"replace(upper(trim({col})), '.', '-')"
 
 
-def to_clean_double(col: Column | str) -> Column:
+def to_clean_double(col: str) -> str:
     """F1 + P5 — safe float coercion with NaN/±inf scrubbed to NULL.
 
     Reference: _safe_float (transform_valuation.py:12-19) plus the
@@ -34,31 +30,25 @@ def to_clean_double(col: Column | str) -> Column:
     yields NULL on unparsable input; we additionally normalize NaN and ±inf
     to NULL so downstream comparisons/aggregates see pandas-like missing.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    d = c.cast("double")
-    return F.when(F.isnan(d) | (F.abs(d) == F.lit(_INF)), F.lit(None)).otherwise(d)
+    d = f"CAST({col} AS DOUBLE)"
+    return (
+        f"CASE WHEN isnan({d}) OR abs({d}) = CAST('Infinity' AS DOUBLE)"
+        f" THEN NULL ELSE {d} END"
+    )
 
 
-def null_if_nonpositive(col: Column | str) -> Column:
+def null_if_nonpositive(col: str) -> str:
     """P4 — conditional NULL-ing: value <= 0 → NULL (price / market_cap).
 
     Reference: transform_valuation.py:142-145.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c <= 0, F.lit(None)).otherwise(c)
+    return f"CASE WHEN ({col}) <= 0 THEN NULL ELSE {col} END"
 
 
-def fill_unknown(col: Column | str, default: str = "Unknown") -> Column:
+def fill_unknown(col: str, default: str = "Unknown") -> str:
     """P6 — NULL/empty string → default (sector fill).
 
     Reference: transform_valuation.py:147 (and source-side :75).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull() | (c == ""), F.lit(default)).otherwise(c)
-
-
-def first_value(*cols: Column) -> Column:
-    """F2 — first non-NULL argument (reference skips None and NaN;
-    post-normalization those are the same thing). transform_valuation.py:22-30.
-    """
-    return F.coalesce(*cols)
+    lit = "'" + default.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"CASE WHEN ({col}) IS NULL OR ({col}) = '' THEN {lit} ELSE {col} END"

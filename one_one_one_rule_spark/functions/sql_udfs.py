@@ -7,39 +7,33 @@ Spark the engine can hand SQL users the SAME definitions: Spark 4 SQL
 scalar UDFs (``CREATE FUNCTION ... RETURNS ... RETURN <expr>``) compile
 to ordinary Catalyst expressions — inlined into the plan, codegen'd,
 pushdown-compatible — so there is no Python-worker or JVM-UDF penalty at
-any scale. :func:`register_sql_udfs` installs temporary functions that
-mirror functions/valuation.py one-to-one; tests assert the SQL and
-Column forms agree row-for-row.
+any scale. :func:`register_sql_udfs` installs temporary functions whose
+bodies ARE the functions/valuation.py text, so the SQL surface and the
+pipeline share one definition of each formula; tests assert they agree
+row-for-row with apply_valuation's columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# name -> (signature, body) — bodies mirror functions/valuation.py
-# (guard order included; CASE returns NULL when no branch matches,
-# matching F.when without otherwise).
+from . import valuation as V
+
+#: name -> DOUBLE parameters, passed to the same-named valuation.py builder
+_PARAMS: dict[str, tuple[str, ...]] = {
+    "graham_value": ("trailing_eps", "bvps"),
+    "margin_of_safety": ("graham", "price"),
+    "peg_ratio": ("reported_peg", "trailing_pe", "growth"),
+    "pct_diff": ("price", "fair"),
+}
+
+# name -> (signature, body)
 SQL_UDFS: dict[str, tuple[str, str]] = {
-    "graham_value": (
-        "(trailing_eps DOUBLE, bvps DOUBLE) RETURNS DOUBLE",
-        "CASE WHEN trailing_eps > 0 AND bvps > 0"
-        " THEN sqrt(22.5 * trailing_eps * bvps) END",
-    ),
-    "margin_of_safety": (
-        "(graham DOUBLE, price DOUBLE) RETURNS DOUBLE",
-        "CASE WHEN graham > 0 THEN (graham - price) / graham END",
-    ),
-    "peg_ratio": (
-        "(reported_peg DOUBLE, trailing_pe DOUBLE, growth DOUBLE)"
-        " RETURNS DOUBLE",
-        "CASE WHEN reported_peg > 0 THEN reported_peg"
-        " WHEN trailing_pe > 0 AND growth > 0 THEN trailing_pe /"
-        " (CASE WHEN growth <= 1 THEN growth * 100 ELSE growth END) END",
-    ),
-    "pct_diff": (
-        "(price DOUBLE, fair DOUBLE) RETURNS DOUBLE",
-        "(price - fair) / fair",
-    ),
+    name: (
+        "(" + ", ".join(f"{p} DOUBLE" for p in params) + ") RETURNS DOUBLE",
+        getattr(V, name)(*params),
+    )
+    for name, params in _PARAMS.items()
 }
 
 

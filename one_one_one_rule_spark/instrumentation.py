@@ -6,13 +6,12 @@ perf.py:43-50).
 The reference times eager pandas functions; in a lazy engine the honest
 unit is the Spark *action*. ``log_perf`` wraps a function that triggers
 actions and logs the same four metrics (driver-side wall/CPU/RSS — executor
-metrics live in the Spark UI / history server). ``QueryMetricsListener``
-captures per-query executed-plan metrics (output rows, exchange count)
-from the JVM side via ``QueryExecutionListener`` semantics — registered
-through the observable/py4j bridge-free route: we read the executed plan
-after the action instead of installing a JVM listener, which keeps the
-module pure-Python and cluster-safe.
-"""
+metrics live in the Spark UI / history server). ``plan_metrics`` counts
+shuffles, broadcasts, scans and Python evaluation nodes by reading the
+executed physical plan (no job runs), and ``observed`` attaches
+``observe()`` metrics that the consuming action computes in the same pass.
+Neither installs a JVM listener, which keeps the module pure-Python and
+cluster-safe."""
 
 from __future__ import annotations
 

@@ -4,7 +4,8 @@ as a single lazy DataFrame chain.
 Pipeline: normalize ticker (F3) → drop null/empty (P3) → keep-first dedup
 (D1, deterministic via explicit order column) → coerce numerics to double
 with NaN/±inf→NULL (U6+P5) → non-positive price/market_cap→NULL (P4) →
-sector fill (P6).
+sector fill (P6). Each projection is Spark SQL expression text
+(functions/cleansing.py) applied with one ``selectExpr``.
 
 Scale notes (100 TB): the only shuffle here is the dedup's hash partition by
 ticker; everything else is a narrow projection that fuses into one
@@ -15,8 +16,7 @@ the shuffle is elided.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.cleansing import (
     fill_unknown,
@@ -24,7 +24,7 @@ from ..functions.cleansing import (
     null_if_nonpositive,
     to_clean_double,
 )
-from ..schemas import SNAPSHOT_NUMERIC_COLS
+from ..schemas import SNAPSHOT_NUMERIC_COLS, sql_name
 
 
 def keep_first_dedup(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -37,12 +37,21 @@ def keep_first_dedup(df: DataFrame, keys: list[str], order_col: str) -> DataFram
     full group), but groups are tiny (duplicate tickers), so this is safe at
     any scale.
     """
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    by = ", ".join(sql_name(k) for k in keys)
+    rn = f"row_number() OVER (PARTITION BY {by} ORDER BY {sql_name(order_col)} ASC)"
+    return df.selectExpr("*", f"{rn} AS __rn").filter("__rn = 1").drop("__rn")
+
+
+def _cleansed(column: str, numeric_cols: list[str]) -> str:
+    """The cleanse projection of one column: numerics coerced (U6+P5),
+    non-positive price/market_cap NULLed (P4), sector filled (P6)."""
+    name = sql_name(column)
+    expr = to_clean_double(name) if column in numeric_cols else name
+    if column in ("price", "market_cap"):
+        expr = null_if_nonpositive(expr)
+    elif column == "sector":
+        expr = fill_unknown(expr)
+    return name if expr == name else f"{expr} AS {name}"
 
 
 def cleanse_fundamentals(
@@ -57,27 +66,17 @@ def cleanse_fundamentals(
     used — deterministic only for single-partition or already-ordered input,
     so callers that need oracle parity must pass a real key.
     """
-    numeric_cols = numeric_cols or [c for c in SNAPSHOT_NUMERIC_COLS if c in df.columns]
+    columns = df.columns
+    numeric_cols = numeric_cols or [c for c in SNAPSHOT_NUMERIC_COLS if c in columns]
 
-    synthetic_order = order_col is None
-    if synthetic_order:
+    normalized = [
+        f"{normalize_symbol('ticker')} AS ticker" if c == "ticker" else sql_name(c)
+        for c in columns
+    ]
+    if order_col is None:
         order_col = "__src_order"
-        df = df.withColumn(order_col, F.monotonically_increasing_id())
-
-    df = df.withColumn("ticker", normalize_symbol("ticker"))
-    df = df.filter(F.col("ticker").isNotNull() & (F.col("ticker") != ""))
+        normalized.append(f"monotonically_increasing_id() AS {order_col}")
+    df = df.selectExpr(*normalized).filter("ticker IS NOT NULL AND ticker <> ''")
     df = keep_first_dedup(df, ["ticker"], order_col)
-
-    casts = {c: to_clean_double(c).alias(c) for c in numeric_cols}
-    df = df.withColumns(casts)
-
-    if "price" in df.columns:
-        df = df.withColumn("price", null_if_nonpositive("price"))
-    if "market_cap" in df.columns:
-        df = df.withColumn("market_cap", null_if_nonpositive("market_cap"))
-    if "sector" in df.columns:
-        df = df.withColumn("sector", fill_unknown("sector"))
-
-    if synthetic_order:
-        df = df.drop(order_col)
-    return df
+    # the explicit projection also drops the synthetic order column
+    return df.selectExpr(*[_cleansed(c, numeric_cols) for c in columns])

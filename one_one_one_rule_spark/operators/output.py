@@ -12,7 +12,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import ordered_projection
+from ..schemas import ordered_projection, sql_name
 
 
 def prepend_run_metadata(
@@ -20,7 +20,9 @@ def prepend_run_metadata(
 ) -> DataFrame:
     """P1 — insert literal `as_of_date`, `run_ts_utc` at positions 0,1
     (pipeline_job.py:24-26). Callers pass a pinned clock for deterministic
-    runs or current-date/timestamp strings for live runs (F12)."""
+    runs or current-date/timestamp strings for live runs (F12). Both are
+    outside input, so they are bound as literals, never spliced into SQL
+    text."""
     return df.select(
         F.lit(as_of_date).alias("as_of_date"),
         F.lit(run_ts_utc).alias("run_ts_utc"),
@@ -32,7 +34,7 @@ def build_output(df: DataFrame, as_of_date: str, run_ts_utc: str) -> DataFrame:
     """P1 + P2 — metadata prepend then preference-order projection with
     unknown-extras passthrough (pipeline_job.py:28-61)."""
     out = prepend_run_metadata(df, as_of_date, run_ts_utc)
-    return out.select(*ordered_projection(out.columns))
+    return out.selectExpr(*map(sql_name, ordered_projection(out.columns)))
 
 
 def write_single_csv(df: DataFrame, path: str) -> str:

@@ -8,10 +8,11 @@ Physical shape, chosen for 100 TB:
     which would shuffle every row into #sectors hot partitions.
   - overall medians (A2) via a 1-row agg, attached with a broadcast
     cross join (J2's fillna ≡ coalesce).
-  - every per-row formula (F4-F11) is a native Column expression; the whole
-    post-join stage is one codegen'd projection.
+  - every per-row formula (F4-F11) is Spark SQL expression text from
+    functions/valuation.py, one ``selectExpr`` per dependency layer; the
+    whole post-join stage is one codegen'd projection.
 
-Exact vs approx median: ``exact=True`` (default) uses F.median — an exact
+Exact vs approx median: ``exact=True`` (default) uses median() — an exact
 interpolating percentile, required for duckdb-oracle parity (SURVEY §4).
 At extreme scale pass ``exact=False`` for percentile_approx(0.5), which is
 single-pass and mergeable.
@@ -24,24 +25,29 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_THRESHOLDS, ValuationThresholds
 from ..functions import valuation as V
+from ..schemas import sql_name
+
+
+def _median(column: str, exact: bool) -> str:
+    if exact:
+        return f"median({column})"
+    return f"percentile_approx({column}, 0.5D)"
 
 
 def sector_median_stats(df: DataFrame, exact: bool = True) -> DataFrame:
     """A1 — per-sector exact medians of trailing/forward PE
     (transform_valuation.py:216-219)."""
-    med = F.median if exact else (lambda c: F.percentile_approx(c, 0.5))
     return df.groupBy("sector").agg(
-        med(F.col("trailing_pe")).alias("sector_median_pe"),
-        med(F.col("forward_pe")).alias("sector_median_fpe"),
+        F.expr(f"{_median('trailing_pe', exact)} AS sector_median_pe"),
+        F.expr(f"{_median('forward_pe', exact)} AS sector_median_fpe"),
     )
 
 
 def overall_median_stats(df: DataFrame, exact: bool = True) -> DataFrame:
     """A2 — global medians (1-row DataFrame)."""
-    med = F.median if exact else (lambda c: F.percentile_approx(c, 0.5))
-    return df.agg(
-        med(F.col("trailing_pe")).alias("overall_median_pe"),
-        med(F.col("forward_pe")).alias("overall_median_fpe"),
+    return df.selectExpr(
+        f"{_median('trailing_pe', exact)} AS overall_median_pe",
+        f"{_median('forward_pe', exact)} AS overall_median_fpe",
     )
 
 
@@ -55,6 +61,9 @@ def apply_valuation(
     graham_value, peg_ratio (overwritten), peg_ratio_source, sector_median_pe,
     pe_median_used, fair_value, fair_value_source, margin_of_safety, the three
     tri-state checks, valuation_hunter, valuation, pct_diff.
+
+    Each dependency layer of formulas is one ``selectExpr`` over the
+    functions/valuation.py text.
     """
     sector_stats = sector_median_stats(df, exact_median)
     overall = overall_median_stats(df, exact_median)
@@ -63,76 +72,49 @@ def apply_valuation(
         F.broadcast(overall)
     )
 
-    eps = F.col("trailing_eps")
-    feps = F.col("forward_eps")
-    out = out.withColumns(
-        {
-            "graham_value": V.graham_value(eps, F.col("book_value_per_share")),
-            "peg_ratio_source": V.peg_ratio_source(
-                F.col("peg_ratio"), F.col("trailing_pe"), F.col("earnings_growth")
-            ),
-            # peg_ratio overwritten last so the source column above still sees
-            # the reported value (reference keeps them in separate passes).
-            "peg_ratio": V.peg_ratio(
-                F.col("peg_ratio"), F.col("trailing_pe"), F.col("earnings_growth")
-            ),
-            "pe_median_used": F.coalesce(
-                F.col("sector_median_pe"), F.col("overall_median_pe")
-            ),
-            "fpe_median_used": F.coalesce(
-                F.col("sector_median_fpe"), F.col("overall_median_fpe")
-            ),
-        }
+    # peg_ratio is replaced in place; peg_ratio_source, in the same
+    # projection, still reads the reported value
+    peg_args = ("peg_ratio", "trailing_pe", "earnings_growth")
+    out = out.selectExpr(
+        *[f"{V.peg_ratio(*peg_args)} AS peg_ratio" if c == "peg_ratio"
+          else sql_name(c) for c in out.columns],
+        f"{V.graham_value('trailing_eps', 'book_value_per_share')}"
+        " AS graham_value",
+        f"{V.peg_ratio_source(*peg_args)} AS peg_ratio_source",
+        "coalesce(sector_median_pe, overall_median_pe) AS pe_median_used",
+        "coalesce(sector_median_fpe, overall_median_fpe) AS fpe_median_used",
     )
 
-    out = out.withColumns(
-        {
-            "fair_value": V.fair_value(
-                F.col("graham_value"),
-                F.col("target_mean_price"),
-                eps,
-                F.col("pe_median_used"),
-                feps,
-                F.col("fpe_median_used"),
-            ),
-            "fair_value_source": V.fair_value_source(
-                F.col("graham_value"),
-                F.col("target_mean_price"),
-                eps,
-                F.col("pe_median_used"),
-                feps,
-                F.col("fpe_median_used"),
-            ),
-            "margin_of_safety": V.margin_of_safety(
-                F.col("graham_value"), F.col("price")
-            ),
-        }
+    fair_args = (
+        "graham_value",
+        "target_mean_price",
+        "trailing_eps",
+        "pe_median_used",
+        "forward_eps",
+        "fpe_median_used",
+    )
+    out = out.selectExpr(
+        "*",
+        f"{V.fair_value(*fair_args)} AS fair_value",
+        f"{V.fair_value_source(*fair_args)} AS fair_value_source",
+        f"{V.margin_of_safety('graham_value', 'price')} AS margin_of_safety",
     )
 
-    out = out.withColumns(
-        {
-            "peg_pass": V.peg_pass(F.col("peg_ratio"), thresholds),
-            "pe_vs_sector_pass": V.pe_vs_sector_pass(
-                F.col("trailing_pe"), F.col("pe_median_used"), thresholds
-            ),
-            "margin_of_safety_pass": V.margin_of_safety_pass(
-                F.col("margin_of_safety"), thresholds
-            ),
-        }
+    out = out.selectExpr(
+        "*",
+        f"{V.peg_pass('peg_ratio', thresholds)} AS peg_pass",
+        f"{V.pe_vs_sector_pass('trailing_pe', 'pe_median_used', thresholds)}"
+        " AS pe_vs_sector_pass",
+        f"{V.margin_of_safety_pass('margin_of_safety', thresholds)}"
+        " AS margin_of_safety_pass",
     )
 
-    out = out.withColumns(
-        {
-            "valuation_hunter": V.hunter_verdict(
-                F.col("peg_pass"),
-                F.col("pe_vs_sector_pass"),
-                F.col("margin_of_safety_pass"),
-            ),
-            "valuation": V.valuation_class(
-                F.col("price"), F.col("fair_value"), thresholds
-            ),
-            "pct_diff": V.pct_diff(F.col("price"), F.col("fair_value")),
-        }
+    checks = ("peg_pass", "pe_vs_sector_pass", "margin_of_safety_pass")
+    out = out.selectExpr(
+        "*",
+        f"{V.hunter_verdict(*checks)} AS valuation_hunter",
+        f"{V.valuation_class('price', 'fair_value', thresholds)} AS valuation",
+        f"{V.pct_diff('price', 'fair_value')} AS pct_diff",
     )
 
     return out.drop("overall_median_pe", "overall_median_fpe", "sector_median_fpe", "fpe_median_used")

@@ -15,12 +15,14 @@ pipeline_job.py:83-186) stage for stage on the Spark engine:
    ``sources/`` exactly as in the reference's ``use_wikipedia`` switch.
 3. cleanse → valuate → ordered 29-column output as ONE lazy DataFrame
    plan (plans/pipeline.py) — Catalyst fuses what the reference ran as
-   seven separate pandas passes.
-4. sinks — single-file CSV (S7), optional dated copy
-   (``nasdaq100_valuations_<date>.csv``, pipeline_job.py:137-142), then
-   best-effort post-sink upsert of data + log (S8/S10 via sinks.ship —
-   Drive when a transport/token exists, a local upsert-by-name copy
-   otherwise).
+   seven separate pandas passes. Nothing runs yet.
+4. sinks — the single-file CSV write (S7) is the run's one Spark action:
+   it executes the whole plan once, and an ``Observation`` on that same
+   write yields the row count. The optional dated copy
+   (``nasdaq100_valuations_<date>.csv``, pipeline_job.py:137-142) is a
+   file copy of that CSV. Then best-effort post-sink upsert of data + log
+   (S8/S10 via sinks.ship — Drive when a transport/token exists, a local
+   upsert-by-name copy otherwise).
 
 Every stage logs row counts and ``perf`` lines in the reference's
 format (U7), to console and to the dated log file.
@@ -31,8 +33,12 @@ from __future__ import annotations
 import argparse
 import logging
 import os
+import shutil
 from datetime import datetime, timezone
 from zoneinfo import ZoneInfo
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from .config import ValuationThresholds
 from .instrumentation import log_perf
@@ -162,34 +168,35 @@ def _run_pipeline_logged(
 
     @log_perf
     def transform():
-        out = valuation_pipeline(
+        # builds the lazy plan only; the CSV write below is its one action
+        return valuation_pipeline(
             raw,
             order_col="k",
             thresholds=thresholds,
             as_of_date=as_of_date,
             run_ts_utc=run_ts_utc,
         )
-        # one materialization feeds the count AND both CSV writes —
-        # without it the full fetch->cleanse->valuate plan re-executes
-        # per action (the repo's multi-consumer checkpoint convention)
-        out = out.localCheckpoint(eager=True)
-        return out, out.count()
 
-    output, n_rows = transform()
-    logger.info("Valuation rows: %d", n_rows)
+    output = transform()
 
     @log_perf
     def load_csv():
-        latest = write_single_csv(output, os.path.join(output_dir, basename))
+        rows = Observation()
+        latest = write_single_csv(
+            output.observe(rows, F.count(F.lit(1)).alias("n_rows")),
+            os.path.join(output_dir, basename),
+        )
+        n_rows = rows.get["n_rows"]  # filled in by the write above
         dated = None
         if write_dated_copy:
             dated_name = f"nasdaq100_valuations_{as_of_date}.csv"
             dated = os.path.join(output_dir, dated_name)
             if dated != latest:
-                write_single_csv(output, dated)
-        return latest, dated
+                shutil.copyfile(latest, dated)
+        return latest, dated, n_rows
 
-    latest_path, dated_path = load_csv()
+    latest_path, dated_path, n_rows = load_csv()
+    logger.info("Valuation rows: %d", n_rows)
     logger.info("Wrote latest CSV: %s", latest_path)
     if dated_path:
         logger.info("Wrote dated CSV: %s", dated_path)

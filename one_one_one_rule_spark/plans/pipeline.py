@@ -1,8 +1,11 @@
 """End-to-end valuation pipeline plan (reference pipeline_job.py:83-186).
 
 One lazy DataFrame chain: fundamentals source → cleanse → valuate → ordered
-output. Catalyst fuses the cleanse + valuation projections into single
-codegen stages around the one dedup shuffle and the broadcast median attach.
+output. Every row-wise projection is Spark SQL expression text applied
+with one ``selectExpr`` per dependency layer, so building the plan costs a
+few hundred JVM calls rather than thousands of ``Column`` calls. Catalyst
+fuses the cleanse + valuation projections into single codegen stages
+around the one dedup shuffle and the broadcast median attach.
 """
 
 from __future__ import annotations
@@ -35,8 +38,9 @@ def valuation_pipeline(
     cleansed = cleanse_fundamentals(fundamentals, order_col=order_col)
     valued = apply_valuation(cleansed, thresholds, exact_median=exact_median)
     out = build_output(valued, as_of_date, run_ts_utc)
-    # Drop non-canonical passthrough extras (e.g. the fixture order column).
-    return out.select(*[c for c in OUTPUT_ORDER if c in out.columns])
+    # Drop non-canonical passthrough extras (e.g. the fixture order column);
+    # build_output put them last, so the canonical order is kept.
+    return out.drop(*[c for c in out.columns if c not in OUTPUT_ORDER])
 
 
 def run_fixture_pipeline(

@@ -361,7 +361,7 @@ def tickers_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 + D2 — normalized sorted-distinct ticker universe
     (extract_tickers.py:12-18,41)."""
     raw = synthetic_fundamentals(spark, sf_dir)
-    sym = normalize_symbol("ticker")
+    sym = F.expr(normalize_symbol("ticker"))
     return (
         raw.filter(F.col("ticker").isNotNull())
         .select(sym.alias("symbol"))

@@ -76,3 +76,9 @@ def ordered_projection(columns: list[str]) -> list[str]:
     ordered = [c for c in OUTPUT_ORDER if c in columns]
     extras = [c for c in columns if c not in OUTPUT_ORDER]
     return ordered + extras
+
+
+def sql_name(column: str) -> str:
+    """A column name quoted as a Spark SQL identifier, for expression
+    text (``order`` is a keyword; names may hold dots or backticks)."""
+    return "`" + column.replace("`", "``") + "`"

@@ -67,83 +67,54 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def synthetic_fundamentals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the fundamentals_raw fixture from ``part`` (keeps ``k`` =
-    p_partkey as the deterministic fetch-order column for keep-first dedup)."""
-    part = load_table(spark, sf_dir, "part")
-    k = F.col("p_partkey")
+    p_partkey as the deterministic fetch-order column for keep-first dedup).
 
-    base = F.concat(
-        F.lit("T"),
-        F.when(k % 50 == 49, k - 1).otherwise(k).cast("string"),
+    One ``selectExpr`` of SQL text; double literals carry the ``D`` suffix
+    (a bare ``10.0`` is DECIMAL and would change the divisions)."""
+    k = "p_partkey"
+    base = (
+        f"concat('T', CAST(CASE WHEN {k} % 50 = 49 THEN {k} - 1 ELSE {k} END"
+        " AS STRING))"
     )
-    ticker = (
-        F.when(k % 103 == 0, F.lit(None).cast("string"))
-        .when(k % 101 == 0, F.lit(""))
-        .when(k % 31 == 0, F.concat(F.lit("  "), F.lower(base), F.lit(" ")))
-        .when(k % 41 == 0, F.concat(F.lit("T."), F.substr(base, F.lit(2))))
-        .when(k % 3 == 0, F.lower(base))
-        .otherwise(base)
-    )
-    sector = (
-        F.when(k % 53 == 0, F.lit("NoPE"))
-        .when(k % 19 == 0, F.lit(None).cast("string"))
-        .when(k % 23 == 0, F.lit(""))
-        .otherwise(F.col("p_brand"))
-    )
-    price = (
-        F.when(k % 17 == 0, F.lit(None))
-        .when(k % 13 == 0, F.lit(-5.0))
-        .when(k % 11 == 0, F.lit(0.0))
-        .otherwise(F.col("p_retailprice") / 10.0)
-    ).cast("double")
-    market_cap = (
-        F.when(k % 7 == 0, F.lit(0.0)).otherwise(F.col("p_retailprice") * 1000000.0)
-    ).cast("double")
-    currency = F.when(k % 2 == 0, F.lit("USD")).otherwise(F.lit(""))
-    trailing_pe = (
-        F.when(k % 53 == 0, F.lit(None))
-        .when(k % 5 == 0, F.lit(None))
-        .when(k % 29 == 0, F.lit(-3.0))
-        .otherwise((k % 40) + F.col("p_size") / 10.0)
-    ).cast("double")
-    forward_pe = (
-        F.when(k % 6 == 0, F.lit(None)).otherwise((k % 35) + F.lit(1.5))
-    ).cast("double")
-    trailing_eps = ((k % 21) - F.lit(4.0)).cast("double")
-    forward_eps = (((k % 15) - F.lit(3.0)) * F.lit(1.2)).cast("double")
-    earnings_growth = (
-        F.when(k % 9 == 0, F.lit(None))
-        .when(k % 4 == 0, F.lit(0.15))
-        .when(k % 4 == 1, F.lit(15.0))
-        .when(k % 4 == 2, F.lit(0.0))
-        .otherwise(F.lit(-0.05))
-    ).cast("double")
-    peg_ratio = (
-        F.when(k % 8 == 0, F.lit(1.2))
-        .when(k % 8 == 1, F.lit(-0.5))
-        .when(k % 8 == 2, F.lit(0.0))
-        .otherwise(F.lit(None))
-    ).cast("double")
-    book_value_per_share = (((k % 25) - F.lit(5.0)) * F.lit(2.0)).cast("double")
-    target_mean_price = (
-        F.when(k % 10 == 0, F.lit(50.0))
-        .when(k % 10 == 1, F.lit(-10.0))
-        .otherwise(F.lit(None))
-    ).cast("double")
-
-    return part.select(
-        k.alias("k"),
-        ticker.alias("ticker"),
-        F.col("p_name").alias("company"),
-        sector.alias("sector"),
-        price.alias("price"),
-        market_cap.alias("market_cap"),
-        currency.alias("currency"),
-        trailing_pe.alias("trailing_pe"),
-        forward_pe.alias("forward_pe"),
-        trailing_eps.alias("trailing_eps"),
-        forward_eps.alias("forward_eps"),
-        earnings_growth.alias("earnings_growth"),
-        peg_ratio.alias("peg_ratio"),
-        book_value_per_share.alias("book_value_per_share"),
-        target_mean_price.alias("target_mean_price"),
+    return load_table(spark, sf_dir, "part").selectExpr(
+        f"{k} AS k",
+        f"""CASE WHEN {k} % 103 = 0 THEN CAST(NULL AS STRING)
+                 WHEN {k} % 101 = 0 THEN ''
+                 WHEN {k} % 31 = 0 THEN concat('  ', lower({base}), ' ')
+                 WHEN {k} % 41 = 0 THEN concat('T.', substr({base}, 2))
+                 WHEN {k} % 3 = 0 THEN lower({base})
+                 ELSE {base} END AS ticker""",
+        "p_name AS company",
+        f"""CASE WHEN {k} % 53 = 0 THEN 'NoPE'
+                 WHEN {k} % 19 = 0 THEN CAST(NULL AS STRING)
+                 WHEN {k} % 23 = 0 THEN ''
+                 ELSE p_brand END AS sector""",
+        f"""CAST(CASE WHEN {k} % 17 = 0 THEN NULL
+                      WHEN {k} % 13 = 0 THEN -5.0D
+                      WHEN {k} % 11 = 0 THEN 0.0D
+                      ELSE p_retailprice / 10.0D END AS DOUBLE) AS price""",
+        f"""CAST(CASE WHEN {k} % 7 = 0 THEN 0.0D
+                      ELSE p_retailprice * 1000000.0D END AS DOUBLE) AS market_cap""",
+        f"CASE WHEN {k} % 2 = 0 THEN 'USD' ELSE '' END AS currency",
+        f"""CAST(CASE WHEN {k} % 53 = 0 THEN NULL
+                      WHEN {k} % 5 = 0 THEN NULL
+                      WHEN {k} % 29 = 0 THEN -3.0D
+                      ELSE ({k} % 40) + p_size / 10.0D END AS DOUBLE) AS trailing_pe""",
+        f"""CAST(CASE WHEN {k} % 6 = 0 THEN NULL
+                      ELSE ({k} % 35) + 1.5D END AS DOUBLE) AS forward_pe""",
+        f"CAST(({k} % 21) - 4.0D AS DOUBLE) AS trailing_eps",
+        f"CAST((({k} % 15) - 3.0D) * 1.2D AS DOUBLE) AS forward_eps",
+        f"""CAST(CASE WHEN {k} % 9 = 0 THEN NULL
+                      WHEN {k} % 4 = 0 THEN 0.15D
+                      WHEN {k} % 4 = 1 THEN 15.0D
+                      WHEN {k} % 4 = 2 THEN 0.0D
+                      ELSE -0.05D END AS DOUBLE) AS earnings_growth""",
+        f"""CAST(CASE WHEN {k} % 8 = 0 THEN 1.2D
+                      WHEN {k} % 8 = 1 THEN -0.5D
+                      WHEN {k} % 8 = 2 THEN 0.0D
+                      ELSE NULL END AS DOUBLE) AS peg_ratio""",
+        f"CAST((({k} % 25) - 5.0D) * 2.0D AS DOUBLE) AS book_value_per_share",
+        f"""CAST(CASE WHEN {k} % 10 = 0 THEN 50.0D
+                      WHEN {k} % 10 = 1 THEN -10.0D
+                      ELSE NULL END AS DOUBLE) AS target_mean_price""",
     )

@@ -43,7 +43,7 @@ def normalized_distinct(tickers: DataFrame) -> DataFrame:
     """F3 + D2 — normalize, drop empties, sorted distinct
     (extract_tickers.py:12-18,41)."""
     return (
-        tickers.select(normalize_symbol("symbol").alias("symbol"))
+        tickers.select(F.expr(normalize_symbol("symbol")).alias("symbol"))
         .filter(F.col("symbol").isNotNull() & (F.col("symbol") != ""))
         .distinct()
         .orderBy("symbol")
@@ -52,7 +52,7 @@ def normalized_distinct(tickers: DataFrame) -> DataFrame:
 
 def _normalize_ticker_str(raw: str) -> str:
     """Driver-side twin of :func:`normalize_symbol` (F3): strip → upper →
-    '.'→'-' (extract_tickers.py:12-18). Kept byte-identical to the Column
+    '.'→'-' (extract_tickers.py:12-18). Kept byte-identical to the SQL
     form so the scraped universe matches the engine's normalization."""
     t = raw.strip().upper()
     return t.replace(".", "-") if t else ""

@@ -156,6 +156,12 @@ SCALING_SET = [
      "N^2/area inside the join), but the per-point aggregate combines "
      "map-side so raw pairs never cross a shuffle — records stay "
      "~linear; the production knob is radius/cell scaled to density"),
+    ("docs_bpe_compression", "documents", 1.30,
+     "BPE training runs over the vocabulary-sized word dictionary and the "
+     "corpus encode is a word-keyed join into it, then one combinable "
+     "per-source aggregate: shuffle records are bounded by vocabulary x "
+     "sources, not by corpus rows (measured ~0); bounded at the linear "
+     "ceiling so a per-corpus-row shuffle fails the probe"),
 ]
 
 

@@ -62,3 +62,36 @@ def test_observed_metrics_ride_the_action(spark, sf_dir):
     assert got["n_rows"] == n_consumed == exp.n
     assert got["qty_sum"] == exp.s
     assert got["null_ship"] == 0
+
+
+def test_valuation_plan_construction_is_cheap(spark, sf_dir):
+    """Building the daily valuation plan is SQL text applied with one
+    selectExpr per layer, so it costs a few hundred py4j gateway calls
+    (every ``F.*``/``Column`` call costs several, plus call-site capture).
+    A box-independent guard: the count does not depend on machine speed.
+    py4j's garbage-collection notices ('m' commands) are left out — they
+    release proxies dropped earlier, whenever Python's GC runs."""
+    from one_one_one_rule_spark.plans.pipeline import valuation_pipeline
+    from one_one_one_rule_spark.sources.fixtures import synthetic_fundamentals
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        df = valuation_pipeline(
+            synthetic_fundamentals(spark, sf_dir), order_col="k"
+        )
+    finally:
+        del client.send_command  # back to the class method
+    assert 0 < len(calls) <= 400, len(calls)
+
+    m = plan_metrics(df)
+    got = tuple(m[k] for k in ("exchanges", "broadcasts", "scans", "python_evals"))
+    assert got == (4, 2, 3, 0)

@@ -612,15 +612,26 @@ def test_pipeline_job_entry_point(spark, tmp_path):
 
     out_dir = str(tmp_path / "data")
     upsert_dir = str(tmp_path / "drive")
-    manifest = run_pipeline(
-        spark,
-        "/root/testdata/sf0.001",
-        out_dir,
-        as_of_date="2026-01-01",
-        run_ts_utc="2026-01-01T00:00:00Z",
-        post_sink=LocalCopySink(upsert_dir),
-        upload_log=True,
-    )
+    sc = spark.sparkContext
+    group = f"pipeline_job_entry_point_{os.getpid()}"
+    sc.setJobGroup(group, "run_pipeline")
+    try:
+        manifest = run_pipeline(
+            spark,
+            "/root/testdata/sf0.001",
+            out_dir,
+            as_of_date="2026-01-01",
+            run_ts_utc="2026-01-01T00:00:00Z",
+            post_sink=LocalCopySink(upsert_dir),
+            upload_log=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # one action (the latest-CSV write) runs the whole plan: no eager
+    # checkpoint, no separate count, no second write
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 9, jobs
     assert manifest["n_rows"] > 0
     with open(manifest["latest_csv"], encoding="utf-8") as fh:
         header = fh.readline().strip().split(",")
@@ -633,7 +644,10 @@ def test_pipeline_job_entry_point(spark, tmp_path):
     assert manifest["dated_csv"].endswith(
         "nasdaq100_valuations_2026-01-01.csv"
     )
-    assert os.path.exists(manifest["dated_csv"])
+    with open(manifest["dated_csv"], "rb") as a, open(
+        manifest["latest_csv"], "rb"
+    ) as b:
+        assert a.read() == b.read()
     assert os.path.exists(
         os.path.join(upsert_dir, "nasdaq100_valuations_2026-01-01.csv")
     )

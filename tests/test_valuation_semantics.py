@@ -228,6 +228,31 @@ def test_nan_inf_scrubbed_to_null(spark):
     assert out["N1"]["forward_pe"] is None
 
 
+THRESHOLD_ENV = (
+    "UNDERVALUED_THRESHOLD",
+    "OVERVALUED_THRESHOLD",
+    "PEG_MAX",
+    "PE_SECTOR_MAX_MULT",
+    "MARGIN_OF_SAFETY_MIN",
+)
+
+
+@pytest.mark.parametrize("raw", ["nan", "NaN", "inf", "-inf", "Infinity", "x"])
+def test_thresholds_from_env_reject_non_finite(monkeypatch, raw):
+    """float() parses nan/inf; like an unparsable value they fall back to
+    the defaults (NaN orders above every double in Spark)."""
+    for name in THRESHOLD_ENV:
+        monkeypatch.setenv(name, raw)
+    assert ValuationThresholds.from_env() == T
+
+
+def test_peg_max_nan_does_not_pass_every_peg(spark, monkeypatch):
+    monkeypatch.setenv("PEG_MAX", "nan")
+    rows = [make_row(1, ticker="Q1", peg_ratio=5.0)]
+    out = run(spark, rows, ValuationThresholds.from_env())
+    assert out["Q1"]["peg_pass"] == "fail"  # 5.0 < default 1.0 is false
+
+
 def test_markdown_to_html_matches_reference_rewrites(spark):
     """F19 (analyze...gs:138-146): bold, newline, heading, bullet — in the
     reference's order, wrapped in its styled div."""
@@ -260,14 +285,12 @@ def test_markdown_to_html_matches_reference_rewrites(spark):
 
 
 def test_sql_udfs_match_column_functions(spark, sf_dir):
-    """The Spark 4 SQL scalar UDFs must agree row-for-row with the Column
-    implementations they mirror — and being RETURN-expression UDFs they
-    inline into the plan (no PythonUDF / ScalaUDF node)."""
-    from pyspark.sql import functions as F
-
-    from one_one_one_rule_spark.functions import valuation as V
+    """The Spark 4 SQL scalar UDFs are built from the same
+    functions/valuation.py text the pipeline applies, so they must agree
+    row-for-row with apply_valuation's columns — and being
+    RETURN-expression UDFs they inline into the plan (no PythonUDF /
+    ScalaUDF node)."""
     from one_one_one_rule_spark.functions.sql_udfs import register_sql_udfs
-    from one_one_one_rule_spark.operators.cleanse import cleanse_fundamentals
     from one_one_one_rule_spark.sources.fixtures import synthetic_fundamentals
 
     register_sql_udfs(spark)
@@ -275,37 +298,33 @@ def test_sql_udfs_match_column_functions(spark, sf_dir):
         synthetic_fundamentals(spark, sf_dir), order_col="k"
     )
     d.createOrReplaceTempView("f_sqludf")
+    apply_valuation(d).createOrReplaceTempView("v_sqludf")
 
-    g = V.graham_value(F.col("trailing_eps"), F.col("book_value_per_share"))
-    col_side = d.select(
-        "ticker",
-        g.alias("g"),
-        V.peg_ratio(
-            F.col("peg_ratio"), F.col("trailing_pe"), F.col("earnings_growth")
-        ).alias("peg"),
-        V.margin_of_safety(g, F.col("price")).alias("mos"),
-        V.pct_diff(F.col("price"), g).alias("pd"),
-    )
-
+    cols = ("graham_value", "peg_ratio", "margin_of_safety", "pct_diff")
+    col_side = spark.table("v_sqludf").select("ticker", *cols)
+    # the UDFs read the cleansed inputs (peg_ratio is the reported one);
+    # fair_value comes from the valued row
     sql_side = spark.sql(
         """
-        SELECT ticker,
-               graham_value(trailing_eps, book_value_per_share) AS g,
-               peg_ratio(peg_ratio, trailing_pe, earnings_growth) AS peg,
+        SELECT f.ticker,
+               graham_value(f.trailing_eps, f.book_value_per_share)
+                 AS graham_value,
+               peg_ratio(f.peg_ratio, f.trailing_pe, f.earnings_growth)
+                 AS peg_ratio,
                margin_of_safety(
-                 graham_value(trailing_eps, book_value_per_share), price
-               ) AS mos,
-               pct_diff(
-                 price, graham_value(trailing_eps, book_value_per_share)
-               ) AS pd
-        FROM f_sqludf
+                 graham_value(f.trailing_eps, f.book_value_per_share), f.price
+               ) AS margin_of_safety,
+               pct_diff(f.price, v.fair_value) AS pct_diff
+        FROM f_sqludf f JOIN v_sqludf v ON f.ticker = v.ticker
         """
     )
-    a = {r["ticker"]: (r["g"], r["peg"], r["mos"], r["pd"])
-         for r in col_side.collect()}
-    b = {r["ticker"]: (r["g"], r["peg"], r["mos"], r["pd"])
-         for r in sql_side.collect()}
+    a = {r["ticker"]: tuple(r[c] for c in cols) for r in col_side.collect()}
+    b = {r["ticker"]: tuple(r[c] for c in cols) for r in sql_side.collect()}
     assert a == b and len(a) > 0
+    # every formula has both NULL and non-NULL rows in the fixture
+    for i, c in enumerate(cols):
+        values = [t[i] for t in a.values()]
+        assert None in values and any(v is not None for v in values), c
 
     # scalar SQL UDFs inline: no black-box UDF node survives in the plan
     plan = sql_side._jdf.queryExecution().optimizedPlan().toString()
