@@ -263,14 +263,24 @@ def _resolve_out_path(
     clean in git, the write is redirected to the gitignored
     ``<stem>.latest.json`` so an automated run never dirties a committed
     artifact. Committing a fresh bench is an explicit act:
-    ``python bench.py [--subset] --out <name>``.
+    ``python bench.py [--subset] --out <name>``. Without ``--out``, a run
+    on other than 32 cores always writes a ``.c{cpus}`` name, so it cannot
+    overwrite the 32-core per-query map.
     """
     here = os.path.dirname(os.path.abspath(__file__))
     if requested:
         return os.path.join(here, requested) if not os.path.isabs(
             requested
         ) else requested
-    committed = os.path.join(here, default_name)
+    # cpu-suffixed names for non-default core counts (round-13 VERDICT
+    # item 2): the driver benches the SAME tree at 32 and 8 cores back to
+    # back, and its stdout keeper holds only a 2000-char tail — the full
+    # per-query map physically cannot ride the last line (243 entries =
+    # ~8.1 KB; r8/r9 proved an over-tail last line parses as null). The
+    # full maps therefore live in files: the 8-core run must not clobber
+    # the 32-core artifact the per-query comparison needs.
+    tag = "" if cpus in (None, 32) else f".c{cpus}"
+    target = os.path.join(here, default_name.replace(".json", f"{tag}.json"))
     try:
         dirty = subprocess.run(
             ["git", "status", "--porcelain", "--", default_name],
@@ -284,23 +294,10 @@ def _resolve_out_path(
             == 0
         )
     except Exception:
-        return committed  # not a git checkout: plain write
+        return target  # not a git checkout: plain write
     if tracked and not dirty:
-        # cpu-suffixed redirect for non-default core counts (round-13
-        # VERDICT item 2): the driver benches the SAME tree at 32 and 8
-        # cores back to back, and its stdout keeper holds only a 2000-char
-        # tail — the full per-query map physically cannot ride the last
-        # line (243 entries = ~8.1 KB; r8/r9 proved an over-tail last line
-        # parses as null). The full maps therefore live in files: the
-        # 8-core run must not clobber the 32-core artifact the per-query
-        # comparison needs.
-        suffix = (
-            ".latest.json"
-            if cpus in (None, 32)
-            else f".latest.c{cpus}.json"
-        )
         redirected = os.path.join(
-            here, default_name.replace(".json", suffix)
+            here, default_name.replace(".json", f".latest{tag}.json")
         )
         print(
             f"bench: {default_name} is committed and clean — writing to "
@@ -309,7 +306,7 @@ def _resolve_out_path(
             file=sys.stderr,
         )
         return redirected
-    return committed
+    return target
 
 
 def main(out: str | None = None, names: list[str] | None = None) -> None:

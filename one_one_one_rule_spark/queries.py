@@ -8,6 +8,7 @@ follow the determinism rules documented in oracles.py.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,18 +56,19 @@ def _stage_parquet_slices(spark, slices, prefix: str) -> str:
     Drive folder implies. Shared by every multi-batch streaming gate
     (left-outer watermark flush, late-data drop) AND their mechanism
     tests, so the staging recipe cannot drift between a gate and the
-    test that probes it."""
+    test that probes it.
+
+    The slice writes are independent single-task jobs, so a driver
+    thread pool overlaps them (each file is byte-identical to a
+    sequential write). The pool is capped at the task slots, and a
+    failing slice cancels the writes that have not started before its
+    error propagates."""
     import os
     import shutil
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     src = _session_tmp_dir(prefix)
 
-    # Round-13 (guide §2.6 — overlap independent jobs): the slice writes
-    # are independent single-task jobs that used to run SEQUENTIALLY, so
-    # each gate paid N× (job submit + scan + commit) of wall clock. A
-    # small driver thread pool overlaps them; each slice's file is
-    # byte-identical to the sequential version (same plan, same single
-    # task), only the wall time changes.
     def _write_one(i: int, sl) -> None:
         part_dir = f"{src}/_part{i}"
         sl.coalesce(1).write.mode("overwrite").parquet(part_dir)
@@ -78,11 +80,155 @@ def _stage_parquet_slices(spark, slices, prefix: str) -> str:
         shutil.rmtree(part_dir)
         os.utime(dst, (1700000000 + i, 1700000000 + i))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max(1, len(slices))) as pool:
-        list(pool.map(lambda t: _write_one(*t), enumerate(slices)))
+    workers = min(len(slices), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
+        futures = [
+            pool.submit(_write_one, i, sl) for i, sl in enumerate(slices)
+        ]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        pool.shutdown(cancel_futures=True)  # no-op unless a slice failed
+    for f in futures:
+        if not f.cancelled():
+            f.result()
     return src
+
+
+def _stage_slices(
+    df: DataFrame, preds: list[str], prefix: str
+) -> list[str | None]:
+    """Stage the rows of ``df`` matching each SQL predicate in ``preds``
+    as one parquet file per slice with ONE Spark job: a slice-number
+    column, one task and a partitioned write (the three-job form paid a
+    job submit, scan and commit per slice). The files stay outside any
+    stream source dir, so the caller publishes them one phase at a time.
+    Returns each slice's file path, or None for a slice with no rows."""
+    import glob
+
+    out = f"{_session_tmp_dir(prefix)}/w"
+    case = " ".join(f"WHEN {p} THEN {i}" for i, p in enumerate(preds))
+    (
+        df.withColumn("stage_slice", F.expr(f"CASE {case} END"))
+        .filter("stage_slice IS NOT NULL")
+        .coalesce(1)
+        .write.partitionBy("stage_slice")
+        .parquet(out)
+    )
+    return [
+        next(iter(glob.glob(f"{out}/stage_slice={i}/*.parquet")), None)
+        for i in range(len(preds))
+    ]
+
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_drain_start_lock = threading.Lock()
+
+
+def _drain(spark, writer, state_partitions: int = 4, *, process_all=False):
+    """Start the configured ``DataStreamWriter`` and block until its
+    stream is drained — the one way a gate runs a streaming query: the
+    memory sink (``_drain_stream``), foreachBatch writers, and
+    ``process_all=True`` (``processAllAvailable`` on the default trigger)
+    for sources that availableNow cannot drain. Returns the stopped
+    query, whose ``recentProgress`` stays readable.
+
+    State partitions: a stateful operator keeps one state store per
+    shuffle partition (two per side for stream-stream joins), and each
+    store pays a fixed setup/commit cost every micro-batch (~40-55 ms
+    per store instance in a round-13 sweep, not bytes-bound), so the
+    session default (32) is pure overhead at gate scale; 4 measured best
+    for the JVM-stateful gates. The request is capped at the task slots
+    (``defaultParallelism``): partitions past the slots only add task
+    waves, and an applyInPandasWithState task costs ~0.3 s of Python CPU
+    whatever its row count. Results are partition-count-invariant. At
+    production scale the count is sized to cluster cores x state volume;
+    a checkpoint fixes it at first start.
+
+    Conf: ``spark.sql.shuffle.partitions`` is set only across
+    ``start()`` and restored at once. The query clones the session conf
+    when it is created, so its partition count is fixed once ``start()``
+    returns, and the caller's session never shows the pin while a batch
+    runs. A lock keeps concurrent drains from restoring each other's
+    value. ``spark.newSession()`` would avoid the window but is ruled
+    out: a listener on the caller's session sees no events from a child
+    session's queries."""
+    if not process_all:
+        writer = writer.trigger(availableNow=True)
+    n = min(state_partitions, spark.sparkContext.defaultParallelism)
+    with _drain_start_lock:
+        old = spark.conf.get(_SHUFFLE_PARTITIONS)
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, old)
+    try:
+        if process_all:
+            q.processAllAvailable()
+        else:
+            q.awaitTermination()
+    finally:
+        # a default-trigger query runs until stopped; stop it even when
+        # the drain raises, or it keeps polling its source
+        q.stop()
+    return q
+
+
+def _drain_stream(
+    spark: SparkSession, sdf: DataFrame, name: str, mode: str,
+    state_partitions: int = 4, *, process_all: bool = False,
+) -> DataFrame:
+    """Drain ``sdf`` into a memory-sink table through ``_drain`` and
+    return it."""
+    _drain(
+        spark,
+        sdf.writeStream.format("memory").queryName(name).outputMode(mode),
+        state_partitions,
+        process_all=process_all,
+    )
+    out = spark.table(name)
+    # The resolved DataFrame pins the memory-sink relation; dropping the
+    # uuid-suffixed catalog entry immediately keeps a full registry run from
+    # accumulating one stray temp view per drained gate.
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def _drain_foreach_batch(spark: SparkSession, sdf: DataFrame, fn) -> None:
+    """Drain ``sdf`` through the foreachBatch callback ``fn`` (with its
+    own checkpoint) via ``_drain``."""
+    ckpt = _session_tmp_dir("fb_ckpt_")
+    _drain(
+        spark,
+        sdf.writeStream.foreachBatch(fn).option("checkpointLocation", ckpt),
+    )
+
+
+# the events table as staged slice files store it (ts already cast)
+_EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint,"
+    " event_type string, value double, props string"
+)
+
+# the three event-time slices the dated-file gates (outer joins, resume)
+# and their mechanism tests stage, one file each; the fixture spans
+# through 2024-01-30 at every SF
+_TIME_SLICES = [
+    "ts < TIMESTAMP '2024-01-27 00:00:00'",
+    "ts >= TIMESTAMP '2024-01-27 00:00:00'"
+    " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
+    "ts >= TIMESTAMP '2024-01-29 00:00:00'",
+]
+
+
+def _staged_stream(spark: SparkSession, src: str, schema: str) -> DataFrame:
+    """File stream over ``_stage_parquet_slices`` output: one staged file
+    per micro-batch, in slice order."""
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(src)
+    )
 
 
 def _write_batch_partial(df, store: str, batch_id: int) -> None:
@@ -668,21 +814,23 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the general capability behind the reference's yfinance-dict flattening,
     transform_valuation.py:72-87). Batch analog of the streaming
     tumbling-window aggregate."""
-    e = load_table(spark, sf_dir, "events")
+    return _hourly_rollup(load_table(spark, sf_dir, "events"))
+
+
+def _hourly_rollup(e: DataFrame) -> DataFrame:
+    """The hourly rollup aggregate over a batch or streaming events
+    frame — one definition for the batch query and its streaming gates."""
     k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias(
-                "hour"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value")).alias("total_value"),
-            F.sum(k).cast("bigint").alias("sum_k"),
-            int_avg(k).alias("avg_k"),
-        )
+    return e.groupBy(
+        F.date_format(
+            F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss"
+        ).alias("hour"),
+        "event_type",
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        decimal_sum(F.col("value")).alias("total_value"),
+        F.sum(k).cast("bigint").alias("sum_k"),
+        int_avg(k).alias("avg_k"),
     )
 
 
@@ -1500,57 +1648,12 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _drain_stream(
-    spark: SparkSession, sdf: DataFrame, name: str, mode: str,
-    state_partitions: int = 4,
-) -> DataFrame:
-    """Start + drain a streaming gate query (availableNow -> memory sink)
-    with a bounded number of state partitions.
-
-    Stateful streaming operators keep one state store per shuffle
-    partition (two PER SIDE for stream-stream joins), and each store pays
-    setup/commit/checkpoint overhead every micro-batch. The session
-    default (32) therefore spins up 32-128 stores holding kilobytes each
-    at gate scale - pure fixed cost. Pinning the drain to 8 cut that 4x
-    in a prior round; a round-13 sweep of the per-batch progress metrics
-    (commitTimeMs is per-store-INSTANCE fixed cost, ~40-55 ms each, not
-    bytes-bound — a tmpfs-vs-disk checkpoint A/B was flat) measured 8->4
-    worth another ~0.5-0.8 s on the stream-stream join gates and neutral
-    elsewhere, while 4->2 regressed the applyInPandasWithState gate
-    (Python-side parallelism halves), so 4 is the local floor. Results
-    are partition-count-invariant (exact aggregates / join row sets);
-    shuffle.partitions is restored afterwards. At production scale this
-    knob is sized to cluster cores x state volume (state partition count
-    is fixed at first start by the checkpoint, so it is a deploy-time
-    decision there, not a per-run one)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    out = spark.table(name)
-    # The resolved DataFrame pins the memory-sink relation; dropping the
-    # uuid-suffixed catalog entry immediately keeps a full registry run from
-    # accumulating one stray temp view per drained gate.
-    spark.catalog.dropTempView(name)
-    return out
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over the events table. The fixture stores
-    ``ts`` as parquet TIMESTAMP(NANOS); Spark 4.1 surfaces that as
-    ``timestamp_ntz`` truncated to µs (the pre-4.1 nanosAsLong conf is
-    ignored), so the stream schema declares ``timestamp_ntz`` and casts to
-    session-TZ timestamp — the streaming twin of fixtures.load_events."""
+    ``ts`` as parquet TIMESTAMP(MICROS) not adjusted to UTC (pyarrow:
+    ``timestamp[us]``), which Spark surfaces as ``timestamp_ntz``, so the
+    stream schema declares ``timestamp_ntz`` and casts to session-TZ
+    timestamp — the streaming twin of fixtures.load_events."""
     return (
         spark.readStream.schema(
             "event_id bigint, ts timestamp_ntz, user_id bigint,"
@@ -1575,22 +1678,7 @@ def events_stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     name = "stream_gate_" + uuid.uuid4().hex[:12]
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    stream = _events_stream(spark, sf_dir)
-    rolled = (
-        stream.groupBy(
-            F.date_format(
-                F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value")).alias("total_value"),
-            F.sum(k).cast("bigint").alias("sum_k"),
-            int_avg(k).alias("avg_k"),
-        )
-    )
+    rolled = _hourly_rollup(_events_stream(spark, sf_dir))
     return _drain_stream(spark, rolled, name, "complete")
 
 
@@ -1977,8 +2065,10 @@ def events_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose per-batch work runs IN PYTHON (applyInPandasWithState), so
     # partitions are also the Python-worker parallelism — a 6-rep
     # interleaved A/B at local[32] measured 1.94 s (sp=8) vs 2.32 s
-    # (sp=4); the JVM-stateful gates go the other way (store-instance
-    # fixed cost dominates their kilobyte state).
+    # (sp=4). The drain caps it at the task slots: each Python task costs
+    # ~0.3 s of CPU whatever its rows, so on local[4] 8 partitions ran in
+    # two waves (allUpdatesTimeMs on 10k rows: 0.8 s at 1 partition,
+    # 3.6-4.0 s at 8).
     drained = _drain_stream(
         spark, stateful_user_counts(stream), name, "update",
         state_partitions=8,
@@ -6073,29 +6163,9 @@ def events_stream_foreachbatch_sink(
     same batch oracle."""
     from .streaming.events import foreach_batch_overwrite_sink
 
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    rolled = (
-        _events_stream(spark, sf_dir)
-        .groupBy(
-            F.date_format(
-                F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value")).alias("total_value"),
-            F.sum(k).cast("bigint").alias("sum_k"),
-            int_avg(k).alias("avg_k"),
-        )
-    )
+    rolled = _hourly_rollup(_events_stream(spark, sf_dir))
     out_dir = _session_tmp_dir("fb_sink_")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        foreach_batch_overwrite_sink(rolled, out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    _drain(spark, foreach_batch_overwrite_sink(rolled, out_dir))
     return spark.read.parquet(out_dir)
 
 
@@ -6180,27 +6250,11 @@ def events_stream_click_purchase_leftouter(
     e = load_table(spark, sf_dir, "events")
     src = _stage_parquet_slices(
         spark,
-        [
-            e.filter(pred)
-            for pred in [
-                "ts < TIMESTAMP '2024-01-27 00:00:00'",
-                "ts >= TIMESTAMP '2024-01-27 00:00:00'"
-                " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
-                "ts >= TIMESTAMP '2024-01-29 00:00:00'",
-            ]
-        ],
+        [e.filter(pred) for pred in _TIME_SLICES],
         "lo_src_",
     )
 
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint,"
-            " event_type string, value double, props string"
-        )
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
+    stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
     name = "lojoin_gate_" + uuid.uuid4().hex[:12]
     try:
         return _drain_stream(
@@ -6514,8 +6568,9 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint-resume gate — proves exactly-once ACROSS A RESTART, the
     production property the single-run streaming gates skip.
 
-    Phase 1 stages only the first two time-slices of the events table and
-    drains the hourly rollup (streaming/events.py:
+    The three time-slices of the events table are staged with one job
+    (``_stage_slices``). Phase 1 publishes only the first two and drains
+    the hourly rollup (streaming/events.py:
     foreach_batch_overwrite_sink) with an EXPLICIT checkpoint. The query
     then stops. Phase 2 adds the final slice and starts a NEW query on
     the same source/checkpoint/sink. The restarted query reads ONLY the
@@ -6527,7 +6582,6 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restart ignores the store), or partial output would each break the
     hash. Sliced along event time like the dated-file convention the
     reference's Drive layout implies (load_drive.py's per-run files)."""
-    import os
     import shutil
 
     from .streaming.events import foreach_batch_overwrite_sink
@@ -6535,55 +6589,23 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _session_tmp_dir("resume_src_")
     ckpt = _session_tmp_dir("resume_ckpt_")
     out = _session_tmp_dir("resume_out_")
-    e = load_table(spark, sf_dir, "events")
-    slices = [
-        "ts < TIMESTAMP '2024-01-27 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-27 00:00:00'"
-        " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-29 00:00:00'",
-    ]
+    staged = _stage_slices(
+        load_table(spark, sf_dir, "events"), _TIME_SLICES, "resume_stage_"
+    )
 
-    def stage(i: int, pred: str) -> None:
-        part_dir = f"{src}/_part{i}"
-        e.filter(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        shutil.move(f"{part_dir}/{part}", f"{src}/{i:03d}.parquet")
-        shutil.rmtree(part_dir)
+    def publish(i: int) -> None:
+        if staged[i] is not None:
+            shutil.move(staged[i], f"{src}/{i:03d}.parquet")
 
     def run_pipeline() -> None:
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint,"
-                " event_type string, value double, props string"
-            )
-            .format("parquet")
-            .load(src)
-        )
-        k = F.get_json_object("props", "$.k").cast("bigint")
-        rolled = stream.groupBy(
-            F.date_format(
-                F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("hour"),
-            "event_type",
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value")).alias("total_value"),
-            F.sum(k).cast("bigint").alias("sum_k"),
-            int_avg(k).alias("avg_k"),
-        )
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            foreach_batch_overwrite_sink(rolled, out, checkpoint_dir=ckpt)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        stream = spark.readStream.schema(_EVENTS_SCHEMA).parquet(src)
+        sink = foreach_batch_overwrite_sink(_hourly_rollup(stream), out, ckpt)
+        _drain(spark, sink)
 
-    stage(0, slices[0])
-    stage(1, slices[1])
+    publish(0)
+    publish(1)
     run_pipeline()  # phase 1: first two slices, checkpoint written
-    stage(2, slices[2])
+    publish(2)
     run_pipeline()  # phase 2: resumes from checkpoint, reads ONLY slice 2
     return spark.read.parquet(out)
 
@@ -6789,7 +6811,6 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "annprobe_src_",
     )
     store = _session_tmp_dir("annprobe_store_")
-    ckpt = _session_tmp_dir("annprobe_ckpt_")
 
     def probe(bdf: DataFrame, batch_id: int) -> None:
         from .operators.similarity import ivf_topk_from_index_chunked
@@ -6802,19 +6823,9 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivf_topk_from_index_chunked(bdf.sparkSession, path, ids, k=5)
         _write_batch_partial(out, store, batch_id)
 
-    stream = (
-        spark.readStream.schema("vec_id bigint")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    _drain_foreach_batch(
+        spark, _staged_stream(spark, src, "vec_id bigint"), probe
     )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return _read_batch_partials(spark, store)
 
 
@@ -7030,26 +7041,10 @@ def events_stream_click_purchase_fullouter(
     e = load_table(spark, sf_dir, "events")
     src = _stage_parquet_slices(
         spark,
-        [
-            e.filter(pred)
-            for pred in [
-                "ts < TIMESTAMP '2024-01-27 00:00:00'",
-                "ts >= TIMESTAMP '2024-01-27 00:00:00'"
-                " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
-                "ts >= TIMESTAMP '2024-01-29 00:00:00'",
-            ]
-        ],
+        [e.filter(pred) for pred in _TIME_SLICES],
         "fo_src_",
     )
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint,"
-            " event_type string, value double, props string"
-        )
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
+    stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
     name = "fojoin_gate_" + uuid.uuid4().hex[:12]
     try:
         return _drain_stream(

@@ -1028,6 +1028,7 @@ def quotes_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch planning, replay), not table ingestion."""
     import uuid
 
+    from .queries import _drain_stream
     from .sources.quote_stream_datasource import QuoteStreamDataSource
 
     spark.dataSource.register(QuoteStreamDataSource)
@@ -1045,28 +1046,9 @@ def quotes_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("price_cents").cast("bigint").alias("low_cents"),
         F.max_by("price_cents", "tick").cast("bigint").alias("close_cents"),
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = None
-    try:
-        q = (
-            ohlc.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        q.processAllAvailable()
-    finally:
-        # stop even when the drain raises mid-batch — a leaked
-        # default-trigger query would keep polling the drained source for
-        # the rest of the sweep (same convention as _drain_stream)
-        if q is not None:
-            q.stop()
-            q.awaitTermination()
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    return _drain_stream(
+        spark, ohlc, name, "complete", process_all=True
+    ).localCheckpoint(eager=True)
 
 
 @register(

@@ -2353,7 +2353,12 @@ def late_data_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
 
 
 def _register_stream_late_data() -> None:
-    from .queries import _drain_stream, _stage_parquet_slices
+    from .queries import (
+        _EVENTS_SCHEMA,
+        _drain_stream,
+        _stage_parquet_slices,
+        _staged_stream,
+    )
 
     @register(
         "events_stream_late_data",
@@ -2406,15 +2411,7 @@ GROUP BY 1, 2
         src = _stage_parquet_slices(
             spark, late_data_slices(spark, sf_dir), "late3_"
         )
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint,"
-                " event_type string, value double, props string"
-            )
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
+        stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
         agg = (
             stream.withWatermark("ts", f"{_LATE_DELAY_H} hours")
             .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")

@@ -412,9 +412,11 @@ def _register_stream_incremental_dedup() -> None:
         keeping per-batch cost O(|delta| + matched buckets)."""
         from .operators.dedup import doc_hash_sets, incremental_lsh_dedup
         from .queries import (
+            _drain_foreach_batch,
             _read_batch_partials,
             _session_tmp_dir,
             _stage_parquet_slices,
+            _staged_stream,
             _write_batch_partial,
         )
 
@@ -434,7 +436,6 @@ def _register_stream_incremental_dedup() -> None:
             "incdedup_src_",
         )
         out = _session_tmp_dir("incdedup_out_")
-        ckpt = _session_tmp_dir("incdedup_ckpt_")
 
         def probe(bdf: DataFrame, batch_id: int) -> None:
             base_sets = bdf.sparkSession.read.parquet(idx_dir)
@@ -443,22 +444,13 @@ def _register_stream_incremental_dedup() -> None:
             )
             _write_batch_partial(verdicts, out, batch_id)
 
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string,"
-                " source string, n_chars bigint"
-            )
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
+        schema = (
+            "doc_id bigint, text string, lang string,"
+            " source string, n_chars bigint"
         )
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain_foreach_batch(
+            spark, _staged_stream(spark, src, schema), probe
         )
-        q.awaitTermination()
         return _read_batch_partials(spark, out)
 
 
@@ -563,9 +555,11 @@ def events_stream_cms_heavy_hitters(
     sketch store and the previous window's candidate list)."""
     from .operators.skew import cms_build, cms_estimate
     from .queries import (
+        _drain_foreach_batch,
         _read_batch_partials,
         _session_tmp_dir,
         _stage_parquet_slices,
+        _staged_stream,
         _write_batch_partial,
     )
 
@@ -579,26 +573,15 @@ def events_stream_cms_heavy_hitters(
         "cms_src_",
     )
     store = _session_tmp_dir("cms_store_")
-    ckpt = _session_tmp_dir("cms_ckpt_")
 
     def sketch_batch(bdf: DataFrame, batch_id: int) -> None:
         _write_batch_partial(
             cms_build(bdf, "user_id", width=512), store, batch_id
         )
 
-    stream = (
-        spark.readStream.schema("user_id bigint")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
+    _drain_foreach_batch(
+        spark, _staged_stream(spark, src, "user_id bigint"), sketch_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -859,9 +842,11 @@ def events_stream_quantile_sketch(
     the batch table (gate-scale verification; production keeps only the
     sketch store)."""
     from .queries import (
+        _drain_foreach_batch,
         _read_batch_partials,
         _session_tmp_dir,
         _stage_parquet_slices,
+        _staged_stream,
         _write_batch_partial,
     )
 
@@ -877,7 +862,6 @@ def events_stream_quantile_sketch(
         "qsk_src_",
     )
     store = _session_tmp_dir("qsk_store_")
-    ckpt = _session_tmp_dir("qsk_ckpt_")
 
     def sketch_batch(bdf: DataFrame, batch_id: int) -> None:
         partial = _qsketch_rows(bdf).groupBy("event_type", "bucket").agg(
@@ -885,19 +869,8 @@ def events_stream_quantile_sketch(
         )
         _write_batch_partial(partial, store, batch_id)
 
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _staged_stream(spark, src, "event_type string, value double")
+    _drain_foreach_batch(spark, stream, sketch_batch)
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -1114,9 +1087,11 @@ def events_stream_bottomk_sample(
     from pyspark.sql import Window
 
     from .queries import (
+        _drain_foreach_batch,
         _read_batch_partials,
         _session_tmp_dir,
         _stage_parquet_slices,
+        _staged_stream,
         _write_batch_partial,
     )
 
@@ -1130,7 +1105,6 @@ def events_stream_bottomk_sample(
         "bk_src_",
     )
     store = _session_tmp_dir("bk_store_")
-    ckpt = _session_tmp_dir("bk_ckpt_")
     h = (F.col("event_id") * F.lit(2654435761)) % F.lit(_BOTTOMK_MOD)
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
 
@@ -1143,19 +1117,8 @@ def events_stream_bottomk_sample(
         )
         _write_batch_partial(partial, store, batch_id)
 
-    stream = (
-        spark.readStream.schema("event_type string, event_id bigint")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sample_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _staged_stream(spark, src, "event_type string, event_id bigint")
+    _drain_foreach_batch(spark, stream, sample_batch)
 
     merged = (
         _read_batch_partials(spark, store)
@@ -1217,6 +1180,7 @@ if _tws_ok():
         from .queries import (
             _drain_stream,
             _stage_parquet_slices,
+            _staged_stream,
         )
         from .streaming.events import stateful_bottomk_tws
 
@@ -1231,11 +1195,8 @@ if _tws_ok():
             ],
             "twsbk_src_",
         )
-        stream = (
-            spark.readStream.schema("event_type string, event_id bigint")
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
+        stream = _staged_stream(
+            spark, src, "event_type string, event_id bigint"
         )
         drained = _drain_stream(
             spark,

@@ -41,19 +41,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table stores ``ts`` as parquet TIMESTAMP(NANOS). How that
-    surfaces depends on the Spark version, so dispatch on the OBSERVED dtype
-    rather than pinning a legacy conf (FIXTURES.md §Spark-version notes):
+    """The events table stores ``ts`` as parquet TIMESTAMP(MICROS) not
+    adjusted to UTC (pyarrow: ``timestamp[us]``). How that surfaces depends
+    on the Spark version and on how the file was written, so dispatch on
+    the OBSERVED dtype rather than pinning a legacy conf (FIXTURES.md
+    §Spark-version notes):
 
-    - Spark ≤3.x with ``spark.sql.legacy.parquet.nanosAsLong``: ``bigint``
-      nanos → rebuild µs timestamps with integer ``div 1000`` (stays in
-      bigint; a double roundtrip would lose precision at ~1.7e18 ns).
-    - Spark 4.1+: nanos arrive as ``timestamp_ntz`` truncated to µs →
-      one session-TZ-free cast to ``timestamp`` (session TZ is UTC here).
-    - Plain ``timestamp``: passthrough.
+    - Spark 3.4+ (4.1 here): ``timestamp_ntz`` → one session-TZ-free cast
+      to ``timestamp`` (session TZ is UTC here). A NANOS file also lands
+      here, truncated to µs.
+    - A NANOS file on Spark 3.x with
+      ``spark.sql.legacy.parquet.nanosAsLong``: ``bigint`` nanos → rebuild
+      µs timestamps with integer ``div 1000`` (stays in bigint; a double
+      roundtrip would lose precision at ~1.7e18 ns).
+    - Plain ``timestamp`` (Spark ≤3.3): passthrough.
 
     All three land on identical µs values; DuckDB oracles mirror this with
-    CAST(ts AS TIMESTAMP), which also truncates ns → µs."""
+    CAST(ts AS TIMESTAMP)."""
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     dtype = dict(df.dtypes)["ts"]
     if dtype == "bigint":

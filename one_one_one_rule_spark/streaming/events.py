@@ -5,6 +5,8 @@ convention is the batch shadow of a stream. This module provides the
 streaming formulation: file-source reads, watermarked event-time windows,
 and streaming dedup. Batch and streaming share the same aggregate
 expressions, so results converge (verified in tests with availableNow).
+The module only builds streams and sink writers; ``queries._drain`` starts
+and drains them.
 
 Scale notes: state is bounded by the watermark (late data beyond it is
 dropped); the shuffle key is (window, event_type) — low cardinality, so AQE
@@ -15,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -120,25 +123,6 @@ def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(
-    stream_df: DataFrame, table_name: str, output_mode: str = "append"
-) -> None:
-    """Drain the stream's current input with availableNow into an in-memory
-    table (test/dev helper; production sinks are parquet/kafka writers).
-
-    Use output_mode='complete' for aggregations — with append, windows still
-    inside the watermark at end-of-input would never be emitted.
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def purchase_click_join_stream(
     events: DataFrame,
     horizon_minutes: int = 60,
@@ -229,7 +213,11 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    # project first: the whole child row crosses JVM -> Python, and
+    # ``update`` reads only ``value``
+    return events.select("user_id", "value").groupBy(
+        "user_id"
+    ).applyInPandasWithState(
         update,
         outputStructType=USER_COUNT_OUTPUT_SCHEMA,
         stateStructType="n bigint, micros bigint",
@@ -240,7 +228,7 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
 
 def foreach_batch_overwrite_sink(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str | None = None
-) -> None:
+) -> DataStreamWriter:
     """Exactly-once parquet sink via foreachBatch: each micro-batch of a
     complete-mode aggregation REPLACES the output directory, so replaying
     a batch after a failure rewrites identical content instead of
@@ -250,20 +238,20 @@ def foreach_batch_overwrite_sink(
     restates only the partitions it touched; the checkpoint's batch_id is
     the dedup key a transactional sink would use.
 
-    ``checkpoint_dir`` pins an explicit checkpoint so a LATER invocation
-    of the same pipeline resumes from it (source progress + aggregate
-    state) instead of reprocessing — the restart path the resume gate
-    (queries.events_stream_resume) exercises. Left None, Spark uses a
-    temp checkpoint deleted on clean stop."""
+    Returns the configured writer; ``queries._drain`` starts and drains
+    it. ``checkpoint_dir`` pins an explicit checkpoint so a LATER
+    invocation of the same pipeline resumes from it (source progress +
+    aggregate state) instead of reprocessing — the restart path the
+    resume gate (queries.events_stream_resume) exercises. Left None,
+    Spark uses a temp checkpoint deleted on clean stop."""
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    w = stream_df.writeStream.foreachBatch(write_batch)
+    w = stream_df.writeStream.foreachBatch(write_batch).outputMode("complete")
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
+    return w
 
 
 def click_purchase_leftouter_stream(

@@ -16,10 +16,10 @@ from one_one_one_rule_spark.operators.multimodal import (
     synthesize_media,
 )
 from one_one_one_rule_spark.sources.fixtures import load_table
+from one_one_one_rule_spark.queries import _drain_stream
 from one_one_one_rule_spark.streaming.events import (
     dedup_stream,
     hourly_rollup_stream,
-    run_available_now,
     stream_events,
 )
 
@@ -36,12 +36,12 @@ def events_dir(spark, sf_dir, tmp_path_factory):
 def test_streaming_rollup_converges_to_batch(spark, sf_dir, events_dir):
     stream = stream_events(spark, events_dir)
     assert stream.isStreaming
-    run_available_now(
-        hourly_rollup_stream(stream), "rollup_stream", output_mode="complete"
+    rolled = _drain_stream(
+        spark, hourly_rollup_stream(stream), "rollup_stream", "complete"
     )
     got = {
         (r.hour, r.event_type): (r.n_events, r.total_value, r.sum_k)
-        for r in spark.sql("SELECT * FROM rollup_stream").collect()
+        for r in rolled.collect()
     }
 
     batch = load_table(spark, sf_dir, "events")
@@ -68,12 +68,11 @@ def test_streaming_rollup_converges_to_batch(spark, sf_dir, events_dir):
 
 def test_streaming_dedup(spark, events_dir):
     stream = stream_events(spark, events_dir)
-    run_available_now(dedup_stream(stream), "dedup_stream")
-    n = spark.sql("SELECT COUNT(DISTINCT event_id) c FROM dedup_stream").collect()[
-        0
-    ].c
-    total = spark.sql("SELECT COUNT(*) c FROM dedup_stream").collect()[0].c
-    assert n == total  # no duplicate event_ids survive
+    deduped = _drain_stream(
+        spark, dedup_stream(stream), "dedup_stream", "append"
+    )
+    n = deduped.select("event_id").distinct().count()
+    assert n == deduped.count()  # no duplicate event_ids survive
 
 
 def test_multimodal_features_deterministic(spark, sf_dir):
@@ -276,16 +275,17 @@ def test_tws_stateful_user_totals_converges_to_batch(spark, sf_dir, events_dir):
     )
 
     stream = stream_events(spark, events_dir)
-    run_available_now(
-        stateful_user_counts_tws(stream), "tws_totals", output_mode="update"
+    drained = _drain_stream(
+        spark, stateful_user_counts_tws(stream), "tws_totals", "update"
     )
     got = {
         r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            "SELECT user_id, MAX(n_events) AS n_events,"
-            " MAX_BY(total_value, n_events) AS total_value"
-            " FROM tws_totals GROUP BY user_id"
-        ).collect()
+        for r in drained.groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("total_value", "n_events").alias("total_value"),
+        )
+        .collect()
     }
     batch = load_table(spark, sf_dir, "events")
     expected = {
@@ -311,9 +311,16 @@ def test_checkpoint_resume_restores_state_not_files(spark, sf_dir, tmp_path):
     then DELETED before phase 2 adds a third and restarts with the same
     checkpoint — so the final complete-mode output can only cover phase-1
     events via the restored state store, never by re-reading. The result
-    must equal the batch aggregate over all events."""
+    must equal the batch aggregate over all events. Staged and drained
+    by the same helpers as the events_stream_resume gate."""
     import os
 
+    from one_one_one_rule_spark.queries import (
+        _EVENTS_SCHEMA,
+        _TIME_SLICES,
+        _drain,
+        _stage_slices,
+    )
     from one_one_one_rule_spark.streaming.events import (
         foreach_batch_overwrite_sink,
     )
@@ -323,37 +330,17 @@ def test_checkpoint_resume_restores_state_not_files(spark, sf_dir, tmp_path):
     out = str(tmp_path / "out")
     os.makedirs(src)
     e = load_table(spark, sf_dir, "events")
-    slices = [
-        "ts < TIMESTAMP '2024-01-27 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-27 00:00:00'"
-        " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-29 00:00:00'",
-    ]
+    staged = _stage_slices(e, _TIME_SLICES, "resume_test_")
 
     def stage(i):
-        part_dir = f"{src}/_part{i}"
-        e.filter(slices[i]).coalesce(1).write.mode("overwrite").parquet(
-            part_dir
-        )
-        part = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        shutil.move(f"{part_dir}/{part}", f"{src}/{i:03d}.parquet")
-        shutil.rmtree(part_dir)
+        shutil.move(staged[i], f"{src}/{i:03d}.parquet")
 
     def run():
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint,"
-                " event_type string, value double, props string"
-            )
-            .format("parquet")
-            .load(src)
-        )
+        stream = spark.readStream.schema(_EVENTS_SCHEMA).parquet(src)
         rolled = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events")
         )
-        foreach_batch_overwrite_sink(rolled, out, checkpoint_dir=ckpt)
+        _drain(spark, foreach_batch_overwrite_sink(rolled, out, ckpt))
 
     stage(0)
     stage(1)
@@ -373,6 +360,214 @@ def test_checkpoint_resume_restores_state_not_files(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_resume_gate_stages_its_slices_with_one_job(
+    spark, sf_dir, monkeypatch
+):
+    """events_stream_resume stages all three slices through the same
+    ``_stage_slices`` the mechanism test above uses, and that helper runs
+    ONE Spark job (the old form ran one write job per slice)."""
+    import pyarrow.parquet as pq
+
+    from one_one_one_rule_spark import queries as Q
+
+    e = load_table(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_slices_test", "stage_slices_test")
+    try:
+        staged = Q._stage_slices(e, Q._TIME_SLICES, "stage_probe_")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("stage_slices_test")) == 1
+    for path, pred in zip(staged, Q._TIME_SLICES):
+        assert pq.read_metadata(path).num_rows == e.filter(pred).count()
+        assert pq.read_schema(path).names == e.columns
+
+    calls = []
+    real = Q._stage_slices
+
+    def spy(df, preds, prefix):
+        calls.append(preds)
+        return real(df, preds, prefix)
+
+    monkeypatch.setattr(Q, "_stage_slices", spy)
+    Q.QUERIES["events_stream_resume"](spark, sf_dir).collect()
+    assert calls == [Q._TIME_SLICES]
+
+
+def _stateful_counts_writer(spark, events_dir, name):
+    return (
+        stream_events(spark, events_dir)
+        .groupBy("event_type")
+        .count()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+    )
+
+
+@pytest.mark.parametrize("requested", [2, 8])
+def test_drain_caps_state_partitions_at_task_slots(
+    spark, events_dir, requested
+):
+    """The drain pins state partitions to min(requested, task slots)."""
+    from one_one_one_rule_spark.queries import _drain
+
+    name = f"drain_cap_{requested}"
+    q = _drain(
+        spark, _stateful_counts_writer(spark, events_dir, name), requested
+    )
+    spark.catalog.dropTempView(name)
+    parts = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+    assert parts == {min(requested, spark.sparkContext.defaultParallelism)}
+
+
+def test_drain_leaves_caller_conf_alone(spark, events_dir):
+    """The pin lives only across start(): the caller's shuffle.partitions
+    is unchanged while a batch runs, after the drain, and after drains
+    that fail at start() or inside a batch — while the batch itself runs
+    on the pinned count."""
+    from one_one_one_rule_spark.queries import _drain
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "1"
+    seen = []
+
+    def record(bdf, batch_id):
+        seen.append((spark.conf.get(key), bdf.sparkSession.conf.get(key)))
+
+    stream = stream_events(spark, events_dir)
+    _drain(spark, stream.writeStream.foreachBatch(record), 1)
+    assert seen and set(seen) == {(before, "1")}
+    assert spark.conf.get(key) == before
+
+    def boom(bdf, batch_id):
+        raise RuntimeError("batch failed")
+
+    with pytest.raises(Exception, match="batch failed"):
+        _drain(spark, stream.writeStream.foreachBatch(boom), 1)
+    assert spark.conf.get(key) == before
+
+    # complete mode without an aggregation is rejected by start()
+    with pytest.raises(Exception):
+        _drain(
+            spark,
+            stream.writeStream.format("memory")
+            .queryName("drain_bad_start")
+            .outputMode("complete"),
+            1,
+        )
+    assert spark.conf.get(key) == before
+
+
+def test_no_query_sets_shuffle_partitions_outside_the_drain():
+    """``queries._drain`` is the one place that sets
+    spark.sql.shuffle.partitions on a live session."""
+    import ast
+    import pathlib
+
+    import one_one_one_rule_spark as pkg
+
+    offenders = []
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            and (path.name, fn.name) == ("queries.py", "_drain")
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and node.args
+            ):
+                continue
+            arg = node.args[0]
+            names_shuffle = (
+                isinstance(arg, ast.Constant)
+                and arg.value == "spark.sql.shuffle.partitions"
+            ) or (
+                isinstance(arg, ast.Name) and arg.id == "_SHUFFLE_PARTITIONS"
+            )
+            if names_shuffle and id(node) not in allowed:
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert offenders == []
+
+
+def test_stateful_user_counts_sends_two_columns_to_python(spark, events_dir):
+    """applyInPandasWithState ships its whole child row to Python; the
+    operator projects to the two columns ``update`` reads."""
+    from one_one_one_rule_spark.streaming.events import stateful_user_counts
+
+    plan = stateful_user_counts(
+        stream_events(spark, events_dir)
+    )._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState"
+    args = plan.functionExpr().children()
+    assert [args.apply(i).name() for i in range(args.size())] == [
+        "user_id",
+        "value",
+    ]
+
+
+def test_stage_parquet_slices_bounded_and_fails_fast(spark):
+    """The slice-write pool never runs more writes than task slots, and
+    a failing slice propagates its error and cancels the writes that had
+    not started."""
+    import threading
+    import time
+
+    from one_one_one_rule_spark.queries import _stage_parquet_slices
+
+    lock = threading.Lock()
+    running, peak, started = [0], [0], []
+
+    class Slice:
+        """Stands in for a DataFrame: ``coalesce(1).write.mode(m)
+        .parquet(path)`` records the write and writes an empty file."""
+
+        def __init__(self, i):
+            self.i = i
+            self.write = self
+
+        def coalesce(self, n):
+            return self
+
+        def mode(self, m):
+            return self
+
+        def parquet(self, path):
+            import os
+
+            with lock:
+                started.append(self.i)
+                running[0] += 1
+                peak[0] = max(peak[0], running[0])
+            try:
+                if self.i == 0:
+                    raise RuntimeError("slice 0 failed")
+                time.sleep(0.5)
+                os.makedirs(path)
+                open(f"{path}/part-0.parquet", "w").close()
+            finally:
+                with lock:
+                    running[0] -= 1
+
+    slices = [Slice(i) for i in range(16)]
+    with pytest.raises(RuntimeError, match="slice 0 failed"):
+        _stage_parquet_slices(spark, slices, "fail_fast_")
+    assert peak[0] <= spark.sparkContext.defaultParallelism
+    assert len(started) < len(slices)
 
 
 def test_tws_gate_registration_tracks_protobuf_availability():
@@ -1250,14 +1445,12 @@ def test_streaming_rollup_on_rocksdb_state_store(spark, sf_dir, events_dir):
     spark.conf.set(key, rocks)
     try:
         stream = stream_events(spark, events_dir)
-        run_available_now(
-            hourly_rollup_stream(stream),
-            "rollup_rocksdb",
-            output_mode="complete",
+        rolled = _drain_stream(
+            spark, hourly_rollup_stream(stream), "rollup_rocksdb", "complete"
         )
         got = {
             (r.hour, r.event_type): (r.n_events, r.total_value, r.sum_k)
-            for r in spark.sql("SELECT * FROM rollup_rocksdb").collect()
+            for r in rolled.collect()
         }
     finally:
         if old is None:
