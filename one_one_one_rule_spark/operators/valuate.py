@@ -12,10 +12,14 @@ Physical shape, chosen for 100 TB:
     functions/valuation.py, one ``selectExpr`` per dependency layer; the
     whole post-join stage is one codegen'd projection.
 
-Exact vs approx median: ``exact=True`` (default) uses median() — an exact
-interpolating percentile, required for duckdb-oracle parity (SURVEY §4).
-At extreme scale pass ``exact=False`` for percentile_approx(0.5), which is
-single-pass and mergeable.
+The input is read three times (row path, A1, A2) and stays lazy here:
+plans/declarative.py calls this inside an SDP dataset definition. The
+daily pipeline materializes its cleansed input once, ahead of this stage
+(plans/pipeline.py).
+
+Medians are exact (median(), an interpolating percentile), which duckdb-oracle
+parity requires (SURVEY §4); at extreme scale the swap is
+percentile_approx(0.5), which is single-pass and mergeable.
 """
 
 from __future__ import annotations
@@ -28,33 +32,26 @@ from ..functions import valuation as V
 from ..schemas import sql_name
 
 
-def _median(column: str, exact: bool) -> str:
-    if exact:
-        return f"median({column})"
-    return f"percentile_approx({column}, 0.5D)"
-
-
-def sector_median_stats(df: DataFrame, exact: bool = True) -> DataFrame:
+def sector_median_stats(df: DataFrame) -> DataFrame:
     """A1 — per-sector exact medians of trailing/forward PE
     (transform_valuation.py:216-219)."""
     return df.groupBy("sector").agg(
-        F.expr(f"{_median('trailing_pe', exact)} AS sector_median_pe"),
-        F.expr(f"{_median('forward_pe', exact)} AS sector_median_fpe"),
+        F.expr("median(trailing_pe) AS sector_median_pe"),
+        F.expr("median(forward_pe) AS sector_median_fpe"),
     )
 
 
-def overall_median_stats(df: DataFrame, exact: bool = True) -> DataFrame:
+def overall_median_stats(df: DataFrame) -> DataFrame:
     """A2 — global medians (1-row DataFrame)."""
     return df.selectExpr(
-        f"{_median('trailing_pe', exact)} AS overall_median_pe",
-        f"{_median('forward_pe', exact)} AS overall_median_fpe",
+        "median(trailing_pe) AS overall_median_pe",
+        "median(forward_pe) AS overall_median_fpe",
     )
 
 
 def apply_valuation(
     df: DataFrame,
     thresholds: ValuationThresholds = DEFAULT_THRESHOLDS,
-    exact_median: bool = True,
 ) -> DataFrame:
     """Compute valuation metrics + classification labels on a cleansed
     fundamentals DataFrame. Adds the same columns as the reference:
@@ -65,8 +62,8 @@ def apply_valuation(
     Each dependency layer of formulas is one ``selectExpr`` over the
     functions/valuation.py text.
     """
-    sector_stats = sector_median_stats(df, exact_median)
-    overall = overall_median_stats(df, exact_median)
+    sector_stats = sector_median_stats(df)
+    overall = overall_median_stats(df)
 
     out = df.join(F.broadcast(sector_stats), on="sector", how="left").crossJoin(
         F.broadcast(overall)

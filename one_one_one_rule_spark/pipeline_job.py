@@ -13,12 +13,14 @@ pipeline_job.py:83-186) stage for stage on the Spark engine:
 2. source — the deterministic fixture snapshot by default; the live
    yfinance/Wikipedia legs stay behind their network-gated adapters in
    ``sources/`` exactly as in the reference's ``use_wikipedia`` switch.
-3. cleanse → valuate → ordered 29-column output as ONE lazy DataFrame
-   plan (plans/pipeline.py) — Catalyst fuses what the reference ran as
-   seven separate pandas passes. Nothing runs yet.
+3. cleanse → valuate → ordered 29-column output as ONE DataFrame plan
+   (plans/pipeline.py) — Catalyst fuses what the reference ran as seven
+   separate pandas passes. The cleansed snapshot is a lazy checkpoint
+   read by all three valuation consumers; planning it runs the dedup
+   shuffle here, and nothing else runs yet.
 4. sinks — the single-file CSV write (S7) is the run's one Spark action:
-   it executes the whole plan once, and an ``Observation`` on that same
-   write yields the row count. The optional dated copy
+   it executes the rest of the plan once, and an ``Observation`` on that
+   same write yields the row count. The optional dated copy
    (``nasdaq100_valuations_<date>.csv``, pipeline_job.py:137-142) is a
    file copy of that CSV. Then best-effort post-sink upsert of data + log
    (S8/S10 via sinks.ship — Drive when a transport/token exists, a local
@@ -168,7 +170,8 @@ def _run_pipeline_logged(
 
     @log_perf
     def transform():
-        # builds the lazy plan only; the CSV write below is its one action
+        # builds the plan; the dedup shuffle under the cleansed snapshot's
+        # checkpoint runs here, the CSV write below runs everything else
         return valuation_pipeline(
             raw,
             order_col="k",

@@ -813,8 +813,7 @@ def _quantile_normalize(
     (the 100 TB shape, pinned by the audit gates); False = the single
     window sort (cheaper below ~1e8 exploded rows — no checkpoint, no
     totals job); None = size-adaptive (count the vectors via parquet
-    metadata, compare exploded volume against _QNORM_WINDOW_MAX_ROWS) —
-    the same exact()-style split as sector_median_stats(exact=False).
+    metadata, compare exploded volume against _QNORM_WINDOW_MAX_ROWS).
 
     Two-pass DISTRIBUTED rank (round-7 verdict item 1 — the previous
     ``row_number() OVER (PARTITION BY dim)`` sorted each dimension's

@@ -34,6 +34,17 @@ TABLES = [
 ]
 
 
+# The ``part`` columns synthetic_fundamentals reads, as every scale of the
+# test data and perfbench/datagen.py store them. Declaring them skips the
+# per-read schema-inference job; a column missing from a file would read as
+# NULLs instead of failing, so tests/test_sources_sinks.py pins this against
+# the files.
+PART_SCHEMA = (
+    "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+    " p_size INT, p_retailprice DOUBLE"
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
@@ -73,14 +84,16 @@ def synthetic_fundamentals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the fundamentals_raw fixture from ``part`` (keeps ``k`` =
     p_partkey as the deterministic fetch-order column for keep-first dedup).
 
-    One ``selectExpr`` of SQL text; double literals carry the ``D`` suffix
-    (a bare ``10.0`` is DECIMAL and would change the divisions)."""
+    One ``selectExpr`` of SQL text over ``part`` read with the declared
+    PART_SCHEMA; double literals carry the ``D`` suffix (a bare ``10.0`` is
+    DECIMAL and would change the divisions)."""
     k = "p_partkey"
     base = (
         f"concat('T', CAST(CASE WHEN {k} % 50 = 49 THEN {k} - 1 ELSE {k} END"
         " AS STRING))"
     )
-    return load_table(spark, sf_dir, "part").selectExpr(
+    part = spark.read.schema(PART_SCHEMA).parquet(f"{sf_dir}/part.parquet")
+    return part.selectExpr(
         f"{k} AS k",
         f"""CASE WHEN {k} % 103 = 0 THEN CAST(NULL AS STRING)
                  WHEN {k} % 101 = 0 THEN ''

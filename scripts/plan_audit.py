@@ -49,6 +49,11 @@ def main() -> None:
         "shapes are pinned directly by the *_round_plan_shape tests in",
         "tests/test_plan_shapes.py via the shared round builders",
         "(_pr_round / _kcore_degrees / _kcore_induce / _sssp_round).",
+        "`valuation_full` is the same case once: it lazily checkpoints the",
+        "cleansed snapshot, so its row shows only the valuation tail. The",
+        "cleanse subtree's shape is pinned by",
+        "tests/test_instrumentation.py::test_valuation_plan_construction_is_cheap",
+        "(and by the `fundamentals_cleanse` row).",
         "",
         "| query | exchanges | broadcasts | cart | scans | py |",
         "|---|---|---|---|---|---|",

@@ -70,7 +70,12 @@ def test_valuation_plan_construction_is_cheap(spark, sf_dir):
     (every ``F.*``/``Column`` call costs several, plus call-site capture).
     A box-independent guard: the count does not depend on machine speed.
     py4j's garbage-collection notices ('m' commands) are left out — they
-    release proxies dropped earlier, whenever Python's GC runs."""
+    release proxies dropped earlier, whenever Python's GC runs.
+
+    The pipeline checkpoints the cleansed snapshot, so its own plan shows
+    only the valuation tail; the cleanse subtree's shape is pinned on its
+    own."""
+    from one_one_one_rule_spark.operators.cleanse import cleanse_fundamentals
     from one_one_one_rule_spark.plans.pipeline import valuation_pipeline
     from one_one_one_rule_spark.sources.fixtures import synthetic_fundamentals
 
@@ -92,6 +97,13 @@ def test_valuation_plan_construction_is_cheap(spark, sf_dir):
         del client.send_command  # back to the class method
     assert 0 < len(calls) <= 400, len(calls)
 
+    keys = ("exchanges", "broadcasts", "scans", "python_evals")
     m = plan_metrics(df)
-    got = tuple(m[k] for k in ("exchanges", "broadcasts", "scans", "python_evals"))
-    assert got == (4, 2, 3, 0)
+    # tail over the checkpoint: the sector-median shuffle and the two
+    # broadcast median attaches, no file scan
+    assert tuple(m[k] for k in keys) == (1, 2, 0, 0)
+    m = plan_metrics(
+        cleanse_fundamentals(synthetic_fundamentals(spark, sf_dir), order_col="k")
+    )
+    # one scan of part, the keep-first dedup shuffle
+    assert tuple(m[k] for k in keys) == (1, 0, 1, 0)

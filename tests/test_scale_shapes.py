@@ -75,7 +75,7 @@ def test_approx_aggregates_track_exact(spark, sf_dir):
     """The 100 TB substitutes: approx_count_distinct (HLL) within 5% of
     exact, percentile_approx within the value range of the exact median.
     These are the forms the engine swaps in when exactness stops being
-    affordable (valuate.py exact=False path)."""
+    affordable (percentile_approx is valuate.py's median swap at scale)."""
     e = load_table(spark, sf_dir, "events")
     row = e.agg(
         F.approx_count_distinct("user_id").alias("approx_users"),

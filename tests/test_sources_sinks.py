@@ -628,10 +628,11 @@ def test_pipeline_job_entry_point(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # one action (the latest-CSV write) runs the whole plan: no eager
-    # checkpoint, no separate count, no second write
+    # one action (the latest-CSV write) runs the whole plan over the
+    # cleansed snapshot, materialized once: no eager checkpoint, no
+    # separate count, no second write, no schema-inference job
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 9, jobs
+    assert 0 < len(jobs) <= 6, jobs
     assert manifest["n_rows"] > 0
     with open(manifest["latest_csv"], encoding="utf-8") as fh:
         header = fh.readline().strip().split(",")
@@ -662,6 +663,19 @@ def test_pipeline_job_entry_point(spark, tmp_path):
     assert "Pipeline finished" in open(
         manifest["log_path"], encoding="utf-8"
     ).read()
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_part_schema_matches_files(spark, sf_dir, scale):
+    """synthetic_fundamentals reads ``part`` with a declared schema, under
+    which a column missing from the file reads as NULLs instead of failing:
+    the constant must equal what every test-data scale stores."""
+    from pyspark.sql.types import StructType
+
+    from one_one_one_rule_spark.sources.fixtures import PART_SCHEMA
+
+    path = os.path.join(os.path.dirname(sf_dir), scale, "part.parquet")
+    assert StructType.fromDDL(PART_SCHEMA) == spark.read.parquet(path).schema
 
 
 def test_pipeline_job_main_cli(tmp_path):
