@@ -10,16 +10,19 @@ metrics live in the Spark UI / history server). ``plan_metrics`` counts
 shuffles, broadcasts, scans and Python evaluation nodes by reading the
 executed physical plan (no job runs), and ``observed`` attaches
 ``observe()`` metrics that the consuming action computes in the same pass.
-Neither installs a JVM listener, which keeps the module pure-Python and
-cluster-safe."""
+``last_stage_id`` and ``shuffle_write_records_since`` read stage metrics
+off the driver UI's status REST API. None installs a JVM listener, which
+keeps the module pure-Python and cluster-safe."""
 
 from __future__ import annotations
 
 import functools
+import json
 import logging
 import resource
 import sys
 import time
+import urllib.request
 from collections.abc import Callable
 from typing import Any
 
@@ -104,3 +107,36 @@ def observed(df, name: str, **metric_exprs):
         return got
 
     return out, fetch
+
+
+def _ui_stages(sc) -> list[dict]:
+    """Every stage the status store holds, read off the UI's REST API
+    after the async listener bus has ingested every queued event (a sleep
+    would only narrow the snapshot race; under co-tenant load ingestion
+    can lag arbitrarily). Needs the UI: ``sc.uiWebUrl`` is None without
+    it."""
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    except Exception:
+        time.sleep(0.5)  # private-API fallback if the signature moves
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+    with urllib.request.urlopen(url) as r:
+        return json.load(r)
+
+
+def last_stage_id(sc) -> int:
+    """The highest stage id the status store holds right now (-1 if
+    none): the snapshot ``shuffle_write_records_since`` counts after."""
+    return max((s["stageId"] for s in _ui_stages(sc)), default=-1)
+
+
+def shuffle_write_records_since(sc, stage_id: int) -> int:
+    """Shuffle-write records of the stages with id > ``stage_id``: a
+    stage-id delta survives UI eviction of OLD stages (a before/after
+    total would undercount whenever the run itself evicts pre-snapshot
+    entries)."""
+    return sum(
+        s.get("shuffleWriteRecords", 0)
+        for s in _ui_stages(sc)
+        if s["stageId"] > stage_id
+    )

@@ -17,28 +17,16 @@ from pyspark.sql import DataFrame
 
 #: Upper bound (bytes, plan-estimated) under which a relation counts as
 #: "small" and is round-robin-spread to the session's default parallelism.
-#: Env/conf-overridable (``spark.graft.spread.maxBytes``; ``0`` disables).
 #: 64 MB = half a default scan split: any relation this small would plan
 #: at most one split anyway, so spreading it costs one tiny local exchange
 #: and buys full-cluster parallelism for the CPU-bound stage it feeds.
 DEFAULT_SPREAD_MAX_BYTES = 64 << 20
 
 
-def spread_small(
-    df: DataFrame, what: str = "", max_width: int | None = None
-) -> DataFrame:
+def spread_small(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the default parallelism when its
-    plan-estimated size is below the spread threshold; identity otherwise.
-
-    ``max_width`` caps the spread width below the default parallelism
-    (also conf-overridable via ``spark.graft.spread.maxWidth``): the
-    round-12 bench measured the BLOCKED correlation's bytes-tiny delta
-    relation running 2x SLOWER when spread 32-ways — per-task overhead
-    (scheduling, shuffle-block fan-out, broadcast collect of 32 map
-    outputs) swamps the parallelism win once per-partition work drops to
-    milliseconds. Callers whose downstream stage is quadratic-but-cheap
-    per row pass a small cap; CPU-heavy per-row stages (shingle hashing,
-    decode passes) keep the full width.
+    plan-estimated size is below ``DEFAULT_SPREAD_MAX_BYTES``; identity
+    otherwise.
 
     Use immediately before a CPU-heavy per-row stage (hash explodes,
     decode passes, pair fan-outs). Scale behavior: the decision reads the
@@ -48,7 +36,10 @@ def spread_small(
     cores) and the call is a no-op, so no new exchange appears in the
     100 TB plan. Locally (single-row-group fixtures measured in MB) it
     inserts one round-robin exchange of a few MB and un-serializes the
-    downstream stage.
+    downstream stage. Where per-partition work is milliseconds, task
+    overhead swamps the parallelism win (the round-12 bench measured the
+    BLOCKED correlation's bytes-tiny delta relation 2x SLOWER spread
+    32-ways), so such callers do not spread at all.
 
     Correctness: round-robin repartition never changes row multiset, and
     every caller feeds partitioning-insensitive consumers (exact
@@ -56,32 +47,12 @@ def spread_small(
     uses Spark's deterministic sort-before-repartition path (on by
     default) so task retries reproduce the same placement.
     """
-    spark = df.sparkSession
-    try:
-        max_bytes = int(
-            spark.conf.get(
-                "spark.graft.spread.maxBytes", str(DEFAULT_SPREAD_MAX_BYTES)
-            )
-        )
-    except Exception:
-        max_bytes = DEFAULT_SPREAD_MAX_BYTES
-    if max_bytes <= 0:
-        return df
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         return df  # no estimate — leave the plan alone
-    if size > max_bytes:
+    if size > DEFAULT_SPREAD_MAX_BYTES:
         return df
-    width = spark.sparkContext.defaultParallelism
-    try:
-        conf_cap = int(spark.conf.get("spark.graft.spread.maxWidth", "0"))
-    except Exception:
-        conf_cap = 0
-    if conf_cap > 0:
-        width = min(width, conf_cap)
-    if max_width is not None:
-        width = min(width, max_width)
-    return df.repartition(max(1, width))
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -48,51 +48,6 @@ def _session_tmp_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_session_tmp_root)
 
 
-def _stage_parquet_slices(spark, slices, prefix: str) -> str:
-    """Write each DataFrame in ``slices`` as ONE parquet file in a fresh
-    staging dir (under the session temp root), mtimes in slice order, so
-    a ``maxFilesPerTrigger=1`` file stream replays them as separate
-    micro-batches — the dated-file delivery convention the reference's
-    Drive folder implies. Shared by every multi-batch streaming gate
-    (left-outer watermark flush, late-data drop) AND their mechanism
-    tests, so the staging recipe cannot drift between a gate and the
-    test that probes it.
-
-    The slice writes are independent single-task jobs, so a driver
-    thread pool overlaps them (each file is byte-identical to a
-    sequential write). The pool is capped at the task slots, and a
-    failing slice cancels the writes that have not started before its
-    error propagates."""
-    import os
-    import shutil
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    src = _session_tmp_dir(prefix)
-
-    def _write_one(i: int, sl) -> None:
-        part_dir = f"{src}/_part{i}"
-        sl.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        dst = f"{src}/{i:03d}.parquet"
-        shutil.move(f"{part_dir}/{part}", dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (1700000000 + i, 1700000000 + i))
-
-    workers = min(len(slices), spark.sparkContext.defaultParallelism)
-    with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
-        futures = [
-            pool.submit(_write_one, i, sl) for i, sl in enumerate(slices)
-        ]
-        wait(futures, return_when=FIRST_EXCEPTION)
-        pool.shutdown(cancel_futures=True)  # no-op unless a slice failed
-    for f in futures:
-        if not f.cancelled():
-            f.result()
-    return src
-
-
 def _stage_slices(
     df: DataFrame, preds: list[str], prefix: str
 ) -> list[str | None]:
@@ -117,6 +72,36 @@ def _stage_slices(
         next(iter(glob.glob(f"{out}/stage_slice={i}/*.parquet")), None)
         for i in range(len(preds))
     ]
+
+
+def _stage_parquet_slices(
+    df: DataFrame, preds: list[str], prefix: str
+) -> str:
+    """Stage the rows of ``df`` matching each SQL predicate in ``preds``
+    as ONE parquet file per slice in a fresh staging dir (under the
+    session temp root), mtimes in slice order, so a
+    ``maxFilesPerTrigger=1`` file stream replays them as separate
+    micro-batches — the dated-file delivery convention the reference's
+    Drive folder implies. Shared by every multi-batch streaming gate
+    (outer-join watermark flush, late-data drop, sketch merges) AND their
+    mechanism tests, so the staging recipe cannot drift between a gate
+    and the test that probes it.
+
+    All slices are written by ONE Spark job (``_stage_slices``); file
+    ``i`` is then moved to ``{i:03d}.parquet``. The predicates should be
+    disjoint: a row lands in the first slice it matches. A slice with no
+    rows stages no file and so gets no micro-batch (``_stage_slices``'
+    contract); the later slices keep their order."""
+    import os
+    import shutil
+
+    src = _session_tmp_dir(prefix)
+    for i, path in enumerate(_stage_slices(df, preds, prefix)):
+        if path is not None:
+            dst = f"{src}/{i:03d}.parquet"
+            shutil.move(path, dst)
+            os.utime(dst, (1700000000 + i, 1700000000 + i))
+    return src
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -222,7 +207,10 @@ _TIME_SLICES = [
 
 def _staged_stream(spark: SparkSession, src: str, schema: str) -> DataFrame:
     """File stream over ``_stage_parquet_slices`` output: one staged file
-    per micro-batch, in slice order."""
+    per micro-batch, in slice order. The staged files hold every column
+    of the staged frame; the declared ``schema`` reads only the columns
+    the gate uses, so callers stage whole frames instead of projecting
+    each slice."""
     return (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -6247,11 +6235,8 @@ def events_stream_click_purchase_leftouter(
 
     # Stage the dated-file layout: one parquet file per time slice, one
     # micro-batch each (shared staging helper).
-    e = load_table(spark, sf_dir, "events")
     src = _stage_parquet_slices(
-        spark,
-        [e.filter(pred) for pred in _TIME_SLICES],
-        "lo_src_",
+        load_table(spark, sf_dir, "events"), _TIME_SLICES, "lo_src_"
     )
 
     stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
@@ -6801,13 +6786,8 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     path = _session_tmp_dir("ivf_sidx_")
     write_ivf_index(e, path)
-    qids = e.filter(F.col("vec_id") < 5).select("vec_id")
     src = _stage_parquet_slices(
-        spark,
-        [
-            qids.filter(F.col("vec_id") < 2),
-            qids.filter(F.col("vec_id") >= 2),
-        ],
+        e.select("vec_id"), ["vec_id < 2", "vec_id >= 2 AND vec_id < 5"],
         "annprobe_src_",
     )
     store = _session_tmp_dir("annprobe_store_")
@@ -7038,11 +7018,8 @@ def events_stream_click_purchase_fullouter(
 
     from .streaming.events import click_purchase_fullouter_stream
 
-    e = load_table(spark, sf_dir, "events")
     src = _stage_parquet_slices(
-        spark,
-        [e.filter(pred) for pred in _TIME_SLICES],
-        "fo_src_",
+        load_table(spark, sf_dir, "events"), _TIME_SLICES, "fo_src_"
     )
     stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
     name = "fojoin_gate_" + uuid.uuid4().hex[:12]

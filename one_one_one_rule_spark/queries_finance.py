@@ -761,7 +761,7 @@ def events_pairwise_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = d.groupBy("day").agg(
         F.array_sort(F.collect_list(F.struct("user_id", "dc"))).alias("arr")
     )
-    g = spread_small(g, "per-day bar-delta arrays")
+    g = spread_small(g)
     pairs = (
         g.select(F.posexplode("arr").alias("i", "a"), "arr")
         .select("i", "a", F.posexplode("arr").alias("j", "b"))

@@ -2326,12 +2326,16 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LATE_DELAY_H = 6
 
 
-def late_data_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
-    """The 3-slice late-data staging plan: (1) even-id rows — advance the
-    watermark to max(even ts) − delay; (2) odd-id rows at/after that
-    cutoff — on time; (3) odd-id rows before it — genuinely late once
-    batch 2 has closed their windows. Shared by the gate query and the
-    mechanism test (tests/test_quality_ops.py) so the slicing cannot
+def late_data_slices(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[str]]:
+    """The 3-slice late-data staging plan as ``(events, predicates)`` for
+    ``_stage_parquet_slices``: (1) even-id rows — advance the watermark
+    to max(even ts) − delay; (2) odd-id rows at/after that cutoff — on
+    time; (3) odd-id rows before it — genuinely late once batch 2 has
+    closed their windows. The data-derived cutoff enters the predicate
+    text as a ``TIMESTAMP '…'`` literal. Shared by the gate query and
+    the mechanism test (tests/test_quality_ops.py) so the slicing cannot
     drift between them. The 1-row cutoff collect is the bounded-collect
     convention (same class as the quantizer training samples)."""
     e = load_table(spark, sf_dir, "events")
@@ -2344,11 +2348,11 @@ def late_data_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         )
         .collect()[0]["c"]
     )
-    cut_lit = F.lit(cut.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
-    return [
-        e.filter("event_id % 2 = 0"),
-        e.filter("event_id % 2 = 1").filter(F.col("ts") >= cut_lit),
-        e.filter("event_id % 2 = 1").filter(F.col("ts") < cut_lit),
+    cut_lit = f"TIMESTAMP '{cut.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
+    return e, [
+        "event_id % 2 = 0",
+        f"event_id % 2 = 1 AND ts >= {cut_lit}",
+        f"event_id % 2 = 1 AND ts < {cut_lit}",
     ]
 
 
@@ -2409,7 +2413,7 @@ GROUP BY 1, 2
         import uuid
 
         src = _stage_parquet_slices(
-            spark, late_data_slices(spark, sf_dir), "late3_"
+            *late_data_slices(spark, sf_dir), "late3_"
         )
         stream = _staged_stream(spark, src, _EVENTS_SCHEMA)
         agg = (

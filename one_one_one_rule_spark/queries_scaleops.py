@@ -428,12 +428,7 @@ def _register_stream_incremental_dedup() -> None:
         doc_hash_sets(base, 3).write.mode("overwrite").parquet(idx_dir)
 
         src = _stage_parquet_slices(
-            spark,
-            [
-                delta.filter(F.col("doc_id") % 20 == 0),
-                delta.filter(F.col("doc_id") % 20 != 0),
-            ],
-            "incdedup_src_",
+            delta, ["doc_id % 20 = 0", "doc_id % 20 != 0"], "incdedup_src_"
         )
         out = _session_tmp_dir("incdedup_out_")
 
@@ -537,6 +532,11 @@ def events_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the two event-id parity slices the sketch and sample merge gates
+# stage, one micro-batch each
+_EVEN_ODD_IDS = ["event_id % 2 = 0", "event_id % 2 = 1"]
+
+
 @register("events_stream_cms_heavy_hitters", _cms_sql())
 def events_stream_cms_heavy_hitters(
     spark: SparkSession, sf_dir: str
@@ -564,14 +564,7 @@ def events_stream_cms_heavy_hitters(
     )
 
     e = load_table(spark, sf_dir, "events").select("user_id", "event_id")
-    src = _stage_parquet_slices(
-        spark,
-        [
-            e.filter(F.col("event_id") % 2 == 0).select("user_id"),
-            e.filter(F.col("event_id") % 2 == 1).select("user_id"),
-        ],
-        "cms_src_",
-    )
+    src = _stage_parquet_slices(e, _EVEN_ODD_IDS, "cms_src_")
     store = _session_tmp_dir("cms_store_")
 
     def sketch_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -853,14 +846,7 @@ def events_stream_quantile_sketch(
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    src = _stage_parquet_slices(
-        spark,
-        [
-            e.filter(F.col("event_id") % 2 == 0).drop("event_id"),
-            e.filter(F.col("event_id") % 2 == 1).drop("event_id"),
-        ],
-        "qsk_src_",
-    )
+    src = _stage_parquet_slices(e, _EVEN_ODD_IDS, "qsk_src_")
     store = _session_tmp_dir("qsk_store_")
 
     def sketch_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1096,14 +1082,7 @@ def events_stream_bottomk_sample(
     )
 
     e = load_table(spark, sf_dir, "events").select("event_type", "event_id")
-    src = _stage_parquet_slices(
-        spark,
-        [
-            e.filter(F.col("event_id") % 2 == 0),
-            e.filter(F.col("event_id") % 2 == 1),
-        ],
-        "bk_src_",
-    )
+    src = _stage_parquet_slices(e, _EVEN_ODD_IDS, "bk_src_")
     store = _session_tmp_dir("bk_store_")
     h = (F.col("event_id") * F.lit(2654435761)) % F.lit(_BOTTOMK_MOD)
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
@@ -1187,14 +1166,7 @@ if _tws_ok():
         e = load_table(spark, sf_dir, "events").select(
             "event_type", "event_id"
         )
-        src = _stage_parquet_slices(
-            spark,
-            [
-                e.filter(F.col("event_id") % 2 == 0),
-                e.filter(F.col("event_id") % 2 == 1),
-            ],
-            "twsbk_src_",
-        )
+        src = _stage_parquet_slices(e, _EVEN_ODD_IDS, "twsbk_src_")
         stream = _staged_stream(
             spark, src, "event_type string, event_id bigint"
         )

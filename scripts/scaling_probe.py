@@ -32,10 +32,13 @@ import os
 import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from one_one_one_rule_spark.instrumentation import (  # noqa: E402
+    last_stage_id,
+    shuffle_write_records_since,
+)
 from one_one_one_rule_spark.queries import QUERIES  # noqa: E402
 from one_one_one_rule_spark.session import get_spark  # noqa: E402
 
@@ -165,42 +168,6 @@ SCALING_SET = [
 ]
 
 
-def _drain_listener_bus(sc) -> None:
-    """Block until the async status-store listener bus has ingested every
-    queued event — the deterministic fix for the snapshot race (a sleep
-    only narrows it; under co-tenant load ingestion can lag arbitrarily)."""
-    try:
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    except Exception:
-        time.sleep(0.5)  # private-API fallback if the signature moves
-
-
-def _rest_stages(sc) -> list[dict]:
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
-
-
-def _shuffle_state(sc) -> tuple[int, int]:
-    """(max stage id seen, total shuffle write records) right now."""
-    _drain_listener_bus(sc)
-    stages = _rest_stages(sc)
-    max_id = max((s["stageId"] for s in stages), default=-1)
-    return max_id, sum(s.get("shuffleWriteRecords", 0) for s in stages)
-
-
-def _shuffle_rows_since(sc, last_id: int) -> int:
-    """Shuffle-write records of stages with id > last_id: stage-id-based
-    deltas survive UI eviction of OLD stages (a before/after total would
-    undercount whenever the run itself evicts pre-snapshot entries)."""
-    _drain_listener_bus(sc)
-    return sum(
-        s.get("shuffleWriteRecords", 0)
-        for s in _rest_stages(sc)
-        if s["stageId"] > last_id
-    )
-
-
 def main() -> None:
     spark = get_spark(
         "scaling_probe",
@@ -234,13 +201,13 @@ def main() -> None:
             fn = QUERIES[name]
             secs, shuf = [], []
             for _run in range(3):
-                last_id, _ = _shuffle_state(sc)
+                last_id = last_stage_id(sc)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 secs.append(round(time.perf_counter() - t0, 3))
-                shuf.append(_shuffle_rows_since(sc, last_id))
+                shuf.append(shuffle_write_records_since(sc, last_id))
             results[name]["secs"][sf] = round(statistics.median(secs), 3)
             results[name]["shuffle_rows"][sf] = int(statistics.median(shuf))
             print(

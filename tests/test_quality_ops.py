@@ -241,9 +241,9 @@ def test_late_rows_are_actually_dropped_by_watermark(spark, sf_dir):
 
     # THE SAME staging the gate query uses — shared helpers, so the
     # mechanism test can't silently probe a different stream
-    slices = late_data_slices(spark, sf_dir)
-    assert slices[2].count() > 0, "fixture must contain late rows"
-    src = _stage_parquet_slices(spark, slices, "late_drop_test_")
+    e, preds = late_data_slices(spark, sf_dir)
+    assert e.filter(preds[2]).count() > 0, "fixture must contain late rows"
+    src = _stage_parquet_slices(e, preds, "late_drop_test_")
     stream = (
         spark.readStream.schema(
             "event_id bigint, ts timestamp, user_id bigint,"

@@ -17,11 +17,13 @@ the result two ways:
 
 import json
 import os
-import time
-import urllib.request
 
 import pytest
 
+from one_one_one_rule_spark.instrumentation import (
+    last_stage_id,
+    shuffle_write_records_since,
+)
 from one_one_one_rule_spark.queries import QUERIES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -81,35 +83,17 @@ def test_committed_big_leg_exponents_within_bounds():
         )
 
 
-def _shuffle_state(sc):
+def _run_and_count(spark, name, sf_dir):
+    sc = spark.sparkContext
     # the probe metric comes off the status REST API — a session with the
     # UI disabled has no endpoint at all; skip rather than crash on None
     if sc.uiWebUrl is None:
         pytest.skip("spark.ui disabled in this session — no status REST API")
-    # drain the async listener bus first: the status store ingests events
-    # asynchronously, and a fixed sleep only narrows the snapshot race
-    try:
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    except Exception:
-        time.sleep(0.5)
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
-    with urllib.request.urlopen(url) as r:
-        stages = json.load(r)
-    return max((s["stageId"] for s in stages), default=-1), stages
-
-
-def _run_and_count(spark, name, sf_dir):
-    sc = spark.sparkContext
-    last_id, _ = _shuffle_state(sc)
+    last_id = last_stage_id(sc)
     QUERIES[name](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    _, stages = _shuffle_state(sc)
-    return sum(
-        s.get("shuffleWriteRecords", 0)
-        for s in stages
-        if s["stageId"] > last_id
-    )
+    return shuffle_write_records_since(sc, last_id)
 
 
 @pytest.mark.parametrize("name,sfa,sfb,key", REPRODUCE)

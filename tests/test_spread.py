@@ -4,12 +4,13 @@ The helper exists so CPU-heavy map stages (shingle explode+hash, window
 md5, pair fan-outs) parallelize even when their input is bytes-small
 (one scan split / one AQE-coalesced partition). These tests pin the two
 contract halves: it SPREADS relations whose plan-estimated size is under
-the threshold, and it is an IDENTITY above the threshold or when
-disabled — so no new exchange can appear in a production-scale plan.
+the threshold, and it is an IDENTITY above the threshold — so no new
+exchange can appear in a production-scale plan.
 """
 
 from pyspark.sql import functions as F
 
+from one_one_one_rule_spark.operators import spread
 from one_one_one_rule_spark.operators.spread import (
     DEFAULT_SPREAD_MAX_BYTES,
     spread_small,
@@ -31,31 +32,10 @@ def test_small_relation_is_spread_to_default_parallelism(spark, sf_dir):
     assert out.count() == docs.count()
 
 
-def test_large_estimate_is_identity(spark, sf_dir):
+def test_large_estimate_is_identity(spark, sf_dir, monkeypatch):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    old = spark.conf.get("spark.graft.spread.maxBytes", None)
-    spark.conf.set("spark.graft.spread.maxBytes", "1")  # everything "big"
-    try:
-        out = spread_small(docs)
-        assert out is docs  # identity — not even a new plan node
-    finally:
-        if old is None:
-            spark.conf.unset("spark.graft.spread.maxBytes")
-        else:
-            spark.conf.set("spark.graft.spread.maxBytes", old)
-
-
-def test_zero_threshold_disables(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    old = spark.conf.get("spark.graft.spread.maxBytes", None)
-    spark.conf.set("spark.graft.spread.maxBytes", "0")
-    try:
-        assert spread_small(docs) is docs
-    finally:
-        if old is None:
-            spark.conf.unset("spark.graft.spread.maxBytes")
-        else:
-            spark.conf.set("spark.graft.spread.maxBytes", old)
+    monkeypatch.setattr(spread, "DEFAULT_SPREAD_MAX_BYTES", 1)  # all "big"
+    assert spread_small(docs) is docs  # identity — not even a new plan node
 
 
 def test_checkpointed_relation_carries_real_stats(spark):

@@ -396,6 +396,38 @@ def test_resume_gate_stages_its_slices_with_one_job(
     assert calls == [Q._TIME_SLICES]
 
 
+def test_stage_parquet_slices_is_one_job_in_slice_order(spark, sf_dir):
+    """The multi-batch gates' staging helper writes every slice with ONE
+    Spark job, stages one file per non-empty slice holding that slice's
+    rows, and stamps mtimes in slice order (the order a
+    ``maxFilesPerTrigger=1`` stream replays them). The empty third slice
+    stages no file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from one_one_one_rule_spark import queries as Q
+
+    e = load_table(spark, sf_dir, "events")
+    empty = "ts < TIMESTAMP '2000-01-01 00:00:00'"
+    preds = [*Q._TIME_SLICES[:2], empty, Q._TIME_SLICES[2]]
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_parquet_test", "stage_parquet_test")
+    try:
+        src = Q._stage_parquet_slices(e, preds, "stage_parquet_probe_")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("stage_parquet_test")
+    assert len(jobs) == 1
+    files = sorted(os.listdir(src))
+    assert files == ["000.parquet", "001.parquet", "003.parquet"]
+    for f in files:
+        rows = pq.read_metadata(f"{src}/{f}").num_rows
+        assert rows == e.filter(preds[int(f[:3])]).count()
+    mtimes = [os.stat(f"{src}/{f}").st_mtime for f in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+
+
 def _stateful_counts_writer(spark, events_dir, name):
     return (
         stream_events(spark, events_dir)
@@ -518,56 +550,6 @@ def test_stateful_user_counts_sends_two_columns_to_python(spark, events_dir):
         "user_id",
         "value",
     ]
-
-
-def test_stage_parquet_slices_bounded_and_fails_fast(spark):
-    """The slice-write pool never runs more writes than task slots, and
-    a failing slice propagates its error and cancels the writes that had
-    not started."""
-    import threading
-    import time
-
-    from one_one_one_rule_spark.queries import _stage_parquet_slices
-
-    lock = threading.Lock()
-    running, peak, started = [0], [0], []
-
-    class Slice:
-        """Stands in for a DataFrame: ``coalesce(1).write.mode(m)
-        .parquet(path)`` records the write and writes an empty file."""
-
-        def __init__(self, i):
-            self.i = i
-            self.write = self
-
-        def coalesce(self, n):
-            return self
-
-        def mode(self, m):
-            return self
-
-        def parquet(self, path):
-            import os
-
-            with lock:
-                started.append(self.i)
-                running[0] += 1
-                peak[0] = max(peak[0], running[0])
-            try:
-                if self.i == 0:
-                    raise RuntimeError("slice 0 failed")
-                time.sleep(0.5)
-                os.makedirs(path)
-                open(f"{path}/part-0.parquet", "w").close()
-            finally:
-                with lock:
-                    running[0] -= 1
-
-    slices = [Slice(i) for i in range(16)]
-    with pytest.raises(RuntimeError, match="slice 0 failed"):
-        _stage_parquet_slices(spark, slices, "fail_fast_")
-    assert peak[0] <= spark.sparkContext.defaultParallelism
-    assert len(started) < len(slices)
 
 
 def test_tws_gate_registration_tracks_protobuf_availability():
