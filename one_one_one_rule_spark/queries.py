@@ -49,17 +49,21 @@ def _session_tmp_dir(prefix: str) -> str:
 
 
 def _stage_slices(
-    df: DataFrame, preds: list[str], prefix: str
+    df: DataFrame, preds: list[str], root: str
 ) -> list[str | None]:
     """Stage the rows of ``df`` matching each SQL predicate in ``preds``
-    as one parquet file per slice with ONE Spark job: a slice-number
-    column, one task and a partitioned write (the three-job form paid a
-    job submit, scan and commit per slice). The files stay outside any
-    stream source dir, so the caller publishes them one phase at a time.
+    as one parquet file per slice, ``{root}/{i:03d}.parquet``, with ONE
+    Spark job: a slice-number column, one task and a partitioned write
+    (the three-job form paid a job submit, scan and commit per slice).
+    The write's own directory (``_SUCCESS``, the ``stage_slice=i/``
+    folders and their ``.crc`` files) is removed once the files are
+    moved up, so ``root`` holds only the slice files. The predicates
+    should be disjoint: a row lands in the first slice it matches.
     Returns each slice's file path, or None for a slice with no rows."""
     import glob
+    import shutil
 
-    out = f"{_session_tmp_dir(prefix)}/w"
+    out = f"{root}/w"
     case = " ".join(f"WHEN {p} THEN {i}" for i, p in enumerate(preds))
     (
         df.withColumn("stage_slice", F.expr(f"CASE {case} END"))
@@ -68,10 +72,14 @@ def _stage_slices(
         .write.partitionBy("stage_slice")
         .parquet(out)
     )
-    return [
-        next(iter(glob.glob(f"{out}/stage_slice={i}/*.parquet")), None)
-        for i in range(len(preds))
-    ]
+    staged: list[str | None] = []
+    for i in range(len(preds)):
+        path = next(iter(glob.glob(f"{out}/stage_slice={i}/*.parquet")), None)
+        if path is not None:
+            path = shutil.move(path, f"{root}/{i:03d}.parquet")
+        staged.append(path)
+    shutil.rmtree(out)
+    return staged
 
 
 def _stage_parquet_slices(
@@ -87,20 +95,17 @@ def _stage_parquet_slices(
     mechanism tests, so the staging recipe cannot drift between a gate
     and the test that probes it.
 
-    All slices are written by ONE Spark job (``_stage_slices``); file
-    ``i`` is then moved to ``{i:03d}.parquet``. The predicates should be
-    disjoint: a row lands in the first slice it matches. A slice with no
-    rows stages no file and so gets no micro-batch (``_stage_slices``'
-    contract); the later slices keep their order."""
+    All slices are written by ONE Spark job (``_stage_slices``) straight
+    into the returned dir as ``{i:03d}.parquet``. A slice with no rows
+    stages no file and so gets no micro-batch; the later slices keep
+    their order. The caller removes the dir once its stream is
+    drained."""
     import os
-    import shutil
 
     src = _session_tmp_dir(prefix)
-    for i, path in enumerate(_stage_slices(df, preds, prefix)):
+    for i, path in enumerate(_stage_slices(df, preds, src)):
         if path is not None:
-            dst = f"{src}/{i:03d}.parquet"
-            shutil.move(path, dst)
-            os.utime(dst, (1700000000 + i, 1700000000 + i))
+            os.utime(path, (1700000000 + i, 1700000000 + i))
     return src
 
 
@@ -119,7 +124,12 @@ def _drain(spark, writer, state_partitions: int = 4, *, process_all=False):
     State partitions: a stateful operator keeps one state store per
     shuffle partition (two per side for stream-stream joins), and each
     store pays a fixed setup/commit cost every micro-batch (~40-55 ms
-    per store instance in a round-13 sweep, not bytes-bound), so the
+    per store instance in a round-13 sweep, not bytes-bound: it was
+    mostly ``readlink``/``chmod`` process spawns in Hadoop's local
+    filesystem, and the FileSystem checkpoint manager ``get_spark`` pins
+    removed the ``readlink`` ones, taking the benchmark gates'
+    ``stream.state_commit_ms`` from 671 to 45 ms per op on a 4-vCPU
+    host), so the
     session default (32) is pure overhead at gate scale; 4 measured best
     for the JVM-stateful gates. The request is capped at the task slots
     (``defaultParallelism``): partitions past the slots only add task
@@ -6567,6 +6577,7 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restart ignores the store), or partial output would each break the
     hash. Sliced along event time like the dated-file convention the
     reference's Drive layout implies (load_drive.py's per-run files)."""
+    import os
     import shutil
 
     from .streaming.events import foreach_batch_overwrite_sink
@@ -6574,8 +6585,9 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _session_tmp_dir("resume_src_")
     ckpt = _session_tmp_dir("resume_ckpt_")
     out = _session_tmp_dir("resume_out_")
+    stage = _session_tmp_dir("resume_stage_")
     staged = _stage_slices(
-        load_table(spark, sf_dir, "events"), _TIME_SLICES, "resume_stage_"
+        load_table(spark, sf_dir, "events"), _TIME_SLICES, stage
     )
 
     def publish(i: int) -> None:
@@ -6591,7 +6603,9 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish(1)
     run_pipeline()  # phase 1: first two slices, checkpoint written
     publish(2)
+    os.rmdir(stage)  # every staged file is published
     run_pipeline()  # phase 2: resumes from checkpoint, reads ONLY slice 2
+    shutil.rmtree(src)
     return spark.read.parquet(out)
 
 
@@ -6781,6 +6795,8 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever batch size the stream delivers. At 100 TB the index is the
     same partitioned parquet, batches carry thousands of probes, and
     each bounded slice still scans 1/2^planes of the data."""
+    import shutil
+
     from .operators.similarity import write_ivf_index
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -6806,6 +6822,7 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     _drain_foreach_batch(
         spark, _staged_stream(spark, src, "vec_id bigint"), probe
     )
+    shutil.rmtree(src)
     return _read_batch_partials(spark, store)
 
 

@@ -37,6 +37,8 @@ float aggregates.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2429,7 +2431,9 @@ GROUP BY 1, 2
             )
         )
         name = "late_gate_" + uuid.uuid4().hex[:12]
-        return _drain_stream(spark, agg, name, "append")
+        out = _drain_stream(spark, agg, name, "append")
+        shutil.rmtree(src)
+        return out
 
 
 _register_stream_late_data()

@@ -9,6 +9,8 @@ it (cross-source joins, pre-aggregated build sides).
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -446,6 +448,7 @@ def _register_stream_incremental_dedup() -> None:
         _drain_foreach_batch(
             spark, _staged_stream(spark, src, schema), probe
         )
+        shutil.rmtree(src)
         return _read_batch_partials(spark, out)
 
 
@@ -575,6 +578,7 @@ def events_stream_cms_heavy_hitters(
     _drain_foreach_batch(
         spark, _staged_stream(spark, src, "user_id bigint"), sketch_batch
     )
+    shutil.rmtree(src)
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -857,6 +861,7 @@ def events_stream_quantile_sketch(
 
     stream = _staged_stream(spark, src, "event_type string, value double")
     _drain_foreach_batch(spark, stream, sketch_batch)
+    shutil.rmtree(src)
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -1098,6 +1103,7 @@ def events_stream_bottomk_sample(
 
     stream = _staged_stream(spark, src, "event_type string, event_id bigint")
     _drain_foreach_batch(spark, stream, sample_batch)
+    shutil.rmtree(src)
 
     merged = (
         _read_batch_partials(spark, store)
@@ -1176,6 +1182,7 @@ if _tws_ok():
             "twsbk_" + uuid.uuid4().hex[:12],
             "update",
         )
+        shutil.rmtree(src)
         latest = Window.partitionBy("event_type")
         w = Window.partitionBy("event_type").orderBy("h", "event_id")
         merged = (

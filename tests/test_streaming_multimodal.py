@@ -330,7 +330,7 @@ def test_checkpoint_resume_restores_state_not_files(spark, sf_dir, tmp_path):
     out = str(tmp_path / "out")
     os.makedirs(src)
     e = load_table(spark, sf_dir, "events")
-    staged = _stage_slices(e, _TIME_SLICES, "resume_test_")
+    staged = _stage_slices(e, _TIME_SLICES, str(tmp_path / "stage"))
 
     def stage(i):
         shutil.move(staged[i], f"{src}/{i:03d}.parquet")
@@ -362,12 +362,72 @@ def test_checkpoint_resume_restores_state_not_files(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_failed_batch_is_retried_exactly_once_on_restart(
+    spark, sf_dir, tmp_path
+):
+    """Fault injection on the resume gate's pipeline: the hourly rollup
+    streams two staged slices into a foreachBatch callback that writes
+    its output and then fails on the first attempt of batch 1, after
+    batch 1's state delta and offset-log entry are committed but before
+    its commit-log entry. A restart on the same checkpoint must re-run
+    batch 1 only (writing its state delta again, with overwrite
+    allowed), leave the complete-mode output equal to the batch
+    aggregate, and leave the batchId-keyed partial store without a
+    duplicate row."""
+    from one_one_one_rule_spark import queries as Q
+
+    e = load_table(spark, sf_dir, "events")
+    src = Q._stage_parquet_slices(
+        e,
+        [Q._TIME_SLICES[0], "ts >= TIMESTAMP '2024-01-27 00:00:00'"],
+        "fault_src_",
+    )
+    ckpt, out, store = (str(tmp_path / d) for d in ("ckpt", "out", "store"))
+    attempts = []
+
+    def write(bdf, batch_id):
+        attempts.append(batch_id)
+        bdf.write.mode("overwrite").parquet(out)
+        Q._write_batch_partial(
+            bdf.withColumn("batch_id", F.lit(batch_id)), store, batch_id
+        )
+        if attempts == [0, 1]:
+            raise RuntimeError("injected failure in batch 1")
+
+    def drain():
+        stream = Q._staged_stream(spark, src, Q._EVENTS_SCHEMA)
+        rolled = Q._hourly_rollup(stream)
+        Q._drain(
+            spark,
+            rolled.writeStream.foreachBatch(write)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt),
+        )
+
+    with pytest.raises(Exception, match="injected failure in batch 1"):
+        drain()
+    drain()
+    shutil.rmtree(src)
+    assert attempts == [0, 1, 1]
+
+    want = {tuple(r) for r in Q._hourly_rollup(e).collect()}
+    got = spark.read.parquet(out).collect()
+    assert len(got) == len(want) and {tuple(r) for r in got} == want
+    partials = Q._read_batch_partials(spark, store)
+    assert partials.count() == partials.distinct().count()
+    last = partials.filter("batch_id = 1").drop("batch_id").collect()
+    assert len(last) == len(want) and {tuple(r) for r in last} == want
+
+
 def test_resume_gate_stages_its_slices_with_one_job(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, monkeypatch, tmp_path
 ):
     """events_stream_resume stages all three slices through the same
     ``_stage_slices`` the mechanism test above uses, and that helper runs
-    ONE Spark job (the old form ran one write job per slice)."""
+    ONE Spark job (the old form ran one write job per slice), leaving
+    only the slice files in the staging root."""
+    import os
+
     import pyarrow.parquet as pq
 
     from one_one_one_rule_spark import queries as Q
@@ -376,10 +436,14 @@ def test_resume_gate_stages_its_slices_with_one_job(
     sc = spark.sparkContext
     sc.setJobGroup("stage_slices_test", "stage_slices_test")
     try:
-        staged = Q._stage_slices(e, Q._TIME_SLICES, "stage_probe_")
+        staged = Q._stage_slices(e, Q._TIME_SLICES, str(tmp_path))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("stage_slices_test")) == 1
+    assert staged == [str(tmp_path / f"{i:03d}.parquet") for i in range(3)]
+    assert sorted(os.listdir(tmp_path)) == [
+        os.path.basename(p) for p in staged
+    ]
     for path, pred in zip(staged, Q._TIME_SLICES):
         assert pq.read_metadata(path).num_rows == e.filter(pred).count()
         assert pq.read_schema(path).names == e.columns
@@ -387,9 +451,9 @@ def test_resume_gate_stages_its_slices_with_one_job(
     calls = []
     real = Q._stage_slices
 
-    def spy(df, preds, prefix):
+    def spy(df, preds, root):
         calls.append(preds)
-        return real(df, preds, prefix)
+        return real(df, preds, root)
 
     monkeypatch.setattr(Q, "_stage_slices", spy)
     Q.QUERIES["events_stream_resume"](spark, sf_dir).collect()
@@ -428,6 +492,29 @@ def test_stage_parquet_slices_is_one_job_in_slice_order(spark, sf_dir):
     assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
 
 
+def test_staging_and_resume_leave_no_write_dirs(spark, sf_dir):
+    """Staging removes its write dir (``_SUCCESS``, ``stage_slice=i/``
+    and ``.crc`` files) once the slice files are moved out, and the
+    resume gate removes its staging root and its stream source once
+    they are spent: of the dirs the gate allocates under the session
+    temp root, only its checkpoint and its output remain."""
+    import glob
+    import os
+
+    from one_one_one_rule_spark import queries as Q
+
+    e = load_table(spark, sf_dir, "events")
+    src = Q._stage_parquet_slices(e, Q._TIME_SLICES, "leak_probe_")
+    assert sorted(os.listdir(src)) == [f"00{i}.parquet" for i in range(3)]
+    shutil.rmtree(src)
+    root = Q._session_tmp_root
+    before = set(os.listdir(root))
+    Q.QUERIES["events_stream_resume"](spark, sf_dir).collect()
+    left = {d.split("_")[1] for d in set(os.listdir(root)) - before}
+    assert left == {"ckpt", "out"}
+    assert glob.glob(f"{root}/*/w") == []
+
+
 def _stateful_counts_writer(spark, events_dir, name):
     return (
         stream_events(spark, events_dir)
@@ -437,6 +524,25 @@ def _stateful_counts_writer(spark, events_dir, name):
         .queryName(name)
         .outputMode("complete")
     )
+
+
+def test_checkpoint_manager_does_not_shell_out_on_rename(spark, tmp_path):
+    """Sessions from ``get_spark`` write streaming checkpoints through the
+    FileSystem-based manager, whose local rename is one ``rename(2)``;
+    the default FileContext manager forks ``readlink`` on every rename
+    when Hadoop runs without its native library. Checkpoint checksums
+    stay on."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    fm = manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert fm.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+    key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    assert spark.conf.get(key) == "true"
 
 
 @pytest.mark.parametrize("requested", [2, 8])
@@ -498,9 +604,11 @@ def test_drain_leaves_caller_conf_alone(spark, events_dir):
     assert spark.conf.get(key) == before
 
 
-def test_no_query_sets_shuffle_partitions_outside_the_drain():
-    """``queries._drain`` is the one place that sets
-    spark.sql.shuffle.partitions on a live session."""
+def test_no_query_sets_session_conf_outside_the_drain():
+    """``queries._drain`` is the one place that sets a conf key on a live
+    session (``spark.conf.set``), and only across ``start()``; every
+    other setting, the checkpoint manager included, is fixed once by
+    ``session.get_spark``."""
     import ast
     import pathlib
 
@@ -517,21 +625,14 @@ def test_no_query_sets_shuffle_partitions_outside_the_drain():
             for n in ast.walk(fn)
         }
         for node in ast.walk(tree):
-            if not (
+            if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
                 and node.func.attr == "set"
-                and node.args
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+                and id(node) not in allowed
             ):
-                continue
-            arg = node.args[0]
-            names_shuffle = (
-                isinstance(arg, ast.Constant)
-                and arg.value == "spark.sql.shuffle.partitions"
-            ) or (
-                isinstance(arg, ast.Name) and arg.id == "_SHUFFLE_PARTITIONS"
-            )
-            if names_shuffle and id(node) not in allowed:
                 offenders.append(f"{path.name}:{node.lineno}")
     assert offenders == []
 
