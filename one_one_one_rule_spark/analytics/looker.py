@@ -1,39 +1,13 @@
 """Dashboard calculated fields (the Looker Studio surface, README.md:252-292).
 
 The reference documents these as downstream calculated fields; here they are
-first-class, testable Column builders (F15-F17) and aggregates (A3-A4).
+first-class, testable Column builders (F17) and aggregates (A3-A4).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def parse_as_of_date(col: Column | str) -> Column:
-    """F15 — PARSE_DATE('%Y-%m-%d', as_of_date) (README.md:255-257)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_date(c, "yyyy-MM-dd")
-
-
-def discount_to_fair_pct(price: Column, fair: Column) -> Column:
-    """F16 — 100*(fair-price)/fair when fair > 0 (README.md:259-261)."""
-    return F.when(fair > 0, F.lit(100) * (fair - price) / fair)
-
-
-def premium_to_fair_pct(price: Column, fair: Column) -> Column:
-    """F16 — 100*(price-fair)/fair when fair > 0 (README.md:262-264)."""
-    return F.when(fair > 0, F.lit(100) * (price - fair) / fair)
-
-
-def price_to_fair(price: Column, fair: Column) -> Column:
-    """F16 — price/fair when fair > 0 (README.md:265-266)."""
-    return F.when(fair > 0, price / fair)
-
-
-def price_to_graham(price: Column, graham: Column) -> Column:
-    """F16 — price/graham_value when graham > 0 (README.md:267-269)."""
-    return F.when(graham > 0, price / graham)
 
 
 def mos_bucket(mos: Column) -> Column:

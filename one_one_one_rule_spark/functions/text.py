@@ -40,10 +40,6 @@ def hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: x.isin(*words))).cast("bigint")
 
 
-def stopword_ratio(toks: Column) -> Column:
-    return hits(toks, EN_STOPWORDS).cast("double") / token_count(toks)
-
-
 def quality_score(n_tokens: Column, stop_ratio: Column) -> Column:
     """Deterministic heuristic quality score: length saturation × stopword
     penalty. (The general capability: cheap per-doc quality gates for

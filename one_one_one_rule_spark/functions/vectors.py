@@ -74,28 +74,6 @@ def srp_planes(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def plane_dot_terms(emb: str, plane: list[int]) -> str:
-    """Σ emb[i]*coef as an explicit left-associated chain (0-based arrays).
-
-    Coefficients are exact small integers and the addition order is fixed,
-    so the sign of the projection is bit-identical across engines.
-    """
-    return " + ".join(
-        f"CAST({emb}[{i}] AS DOUBLE) * {c}.0"
-        for i, c in enumerate(plane)
-        if c != 0
-    )
-
-
-def plane_dot_terms_sql(emb: str, plane: list[int]) -> str:
-    """DuckDB mirror (1-based list indexing), same term order."""
-    return " + ".join(
-        f"CAST({emb}[{i + 1}] AS DOUBLE) * {c}.0"
-        for i, c in enumerate(plane)
-        if c != 0
-    )
-
-
 def plane_dot_fold(emb: str, plane: list[int]) -> str:
     """Σ emb[i]*coef as a zip_with + aggregate fold (Spark SQL expr string).
 

@@ -196,23 +196,6 @@ def jaccard_pairs(
     return _pair_jaccard(sh).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Tier 3a — 16-minhash signature per doc (columns m0..m15).
-
-    MIN is multiset-invariant, so no shingle-level distinct is needed at
-    all: the only exchange is the map-side-combined groupBy(doc_id), and
-    its partial aggregates are 16 longs per doc. The 16 permutations are
-    computed in the scan stage from a single portable shingle hash, so
-    adding permutations costs no extra shuffle.
-    """
-    sh = _shingle_hash_multiset(docs, n)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_P)).alias(f"m{i}")
-        for i, (a, b) in enumerate(MINHASH_SEEDS)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def band_keys(sets: DataFrame) -> DataFrame:
     """(doc_id, band, key) banded-LSH keys from a per-doc shingle-hash-set
     relation (``s``: array<bigint>, as produced by ``doc_hash_sets``).

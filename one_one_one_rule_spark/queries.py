@@ -133,8 +133,14 @@ def _drain(spark, writer, state_partitions: int = 4, *, process_all=False):
     session default (32) is pure overhead at gate scale; 4 measured best
     for the JVM-stateful gates. The request is capped at the task slots
     (``defaultParallelism``): partitions past the slots only add task
-    waves, and an applyInPandasWithState task costs ~0.3 s of Python CPU
-    whatever its row count. Results are partition-count-invariant. At
+    waves, and each Python task pays a fixed cost. That cost used to be
+    ~0.25 s of Python CPU whatever the task's row count: PySpark
+    invalidates the import caches at every task, and each zipimporter
+    then re-read ``pyspark.zip``'s directory. The worker daemon that
+    ``get_spark`` configures skips re-reads of unchanged archives; a
+    traced ``stream_gates`` op of the applyInPandasWithState gate
+    (``local[4]``, 4 vCPUs) went 0.99 → 0.38 s of Python-worker CPU.
+    Results are partition-count-invariant. At
     production scale the count is sized to cluster cores x state volume;
     a checkpoint fixes it at first start.
 
@@ -2063,10 +2069,13 @@ def events_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose per-batch work runs IN PYTHON (applyInPandasWithState), so
     # partitions are also the Python-worker parallelism — a 6-rep
     # interleaved A/B at local[32] measured 1.94 s (sp=8) vs 2.32 s
-    # (sp=4). The drain caps it at the task slots: each Python task costs
-    # ~0.3 s of CPU whatever its rows, so on local[4] 8 partitions ran in
-    # two waves (allUpdatesTimeMs on 10k rows: 0.8 s at 1 partition,
-    # 3.6-4.0 s at 8).
+    # (sp=4). The drain caps it at the task slots, so on local[4] it runs
+    # 4 partitions in one wave. Before that cap, 8 partitions ran in two
+    # waves (allUpdatesTimeMs on 10k rows: 0.8 s at 1 partition, 3.6-4.0 s
+    # at 8), at a fixed ~0.25 s of Python CPU per task whatever its rows.
+    # That fixed cost was zipimport re-reading pyspark.zip at every task;
+    # get_spark's worker daemon skips it, and a traced op of this gate
+    # went 0.99 → 0.38 s of Python-worker CPU.
     drained = _drain_stream(
         spark, stateful_user_counts(stream), name, "update",
         state_partitions=8,
